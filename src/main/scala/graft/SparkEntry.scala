@@ -62,16 +62,10 @@ object SparkEntry {
       // round tree's filter/join count — at 40 docs the driver's
       // per-round analysis IS the runtime, so turn it off here
       s.conf.set("spark.sql.constraintPropagation.enabled", "false")
-      // pipelined write-behind and world-leaf pinning stay ON (the
-      // engine defaults): round 5 opted this session out of pipelining
-      // when the leaf-pinning probe covered five leaves, but with the
-      // round-6 slim probe (seen+frontier only) the overlap wins again —
-      // measured 26.5-27.2 s pipelined+leaves vs 35.8-37.0 s
-      // synchronous+persisted world on this 40-doc ~7-round world (the
-      // world-leaf broadcast-fan-out pathology is specific to the
-      // synchronous path's per-round parquet re-point and write
-      // re-execution; the pipelined path's in-memory leaf state never
-      // re-expands those subtrees).
+      // the crawl runs the local placement (pipelined write-behind,
+      // world leaves): with the slim seen+frontier probe the overlap
+      // wins even on this 40-doc ~7-round world — measured 26.5-27.2 s
+      // vs 35.8-37.0 s synchronous with a persisted world.
       val spec = WorldSpec("entry-world", nHosts = 4, nDocs = 40,
         politeEvery = 3, redirectEvery = 5, privateEvery = 7, sitemapEvery = 2,
         canonicalHdrEvery = 6, cookieEvery = 3, nonsemEvery = 4,

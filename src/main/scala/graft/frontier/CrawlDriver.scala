@@ -3,50 +3,46 @@ package graft.frontier
 import graft.checkpoint.SnapshotStore
 import graft.checkpoint.SnapshotStore.asDelta
 import graft.model._
-import graft.seen.{PartitionedBloom, UrlSeen}
 import graft.url.UrlFuncs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-import org.apache.spark.util.sketch.BloomFilter
+
+import scala.concurrent.duration.Duration
+import scala.concurrent.{Await, ExecutionContext, Future}
 
 /** BSP crawl loop: one [[CrawlRound]] per iteration, each committed as a
   * snapshot (SURVEY.md §2.11); resume loads the last complete snapshot.
-  * Driver state is O(1) scalars plus one fixed-size bloom — frontier/
-  * seen/outputs never collect (the only per-round collect is the tiny
-  * per-partition lineage table, O(metrics × partitions) rows).
+  * Driver state is O(1) scalars plus the seen-prefilter
+  * ([[SeenPrefilterState]]) — frontier/seen/outputs never collect (the
+  * only per-round collect is the tiny per-partition lineage table,
+  * O(metrics × partitions) rows).
   *
   * Per-round critical path is ONE forcing job (collect the lineage
   * aggregation, which materializes the round's checkpoint/caches and
-  * yields every counter the driver needs) plus one small probe job
-  * that pins the next round's state deltas; the durable delta write +
-  * manifest commit run on an ordered background thread and OVERLAP the
-  * next round's plan construction and forcing jobs (pipelined BSP —
-  * the write's wall time leaves the round critical path entirely, at
-  * the cost of holding two rounds' caches instead of one). Cross-round
-  * state re-points at lazily local-checkpointed in-memory deltas
-  * (plan-truncated leaves that keep their hash partitioning, so the
-  * D1/D4 chains stay Exchange-free); nothing reads a round's parquet
-  * while its write is in flight, and a write failure fails every
-  * subsequent commit (futures are chained), so the manifest sequence
-  * never has holes. Cluster runs keep the synchronous write+commit:
-  * durable recovery there must not depend on executor-local blocks,
-  * and the reliable per-delta checkpoint that pipelining would need is
-  * itself a blocking distributed write (a cluster overlaps rounds at
-  * the storage layer instead). The cumulative URL-seen table is a
-  * union of per-round deltas (never re-read from disk), and the
-  * seen-bloom is merged incrementally from each round's accepted delta
-  * instead of being rebuilt from a full seen scan.
+  * yields every counter the driver needs) plus one small probe job that
+  * pins the next round's state. Every round, the seed bootstrap
+  * included, hands its durable delta write + manifest commit to one
+  * write pipeline: an ordered background thread whose writes are
+  * chained, so a failed write fails every later commit and the manifest
+  * sequence never has holes. One rule, the crawl's [[Placement]],
+  * decides the rest: locally the write OVERLAPS the next round's plan
+  * construction and forcing jobs (holding two rounds' caches instead of
+  * one) and next-round state re-points at lazily local-checkpointed
+  * in-memory deltas (plan-truncated leaves that keep their hash
+  * partitioning, so the D1/D4 chains stay Exchange-free); on a cluster
+  * the write is awaited and state re-points at the committed parquet,
+  * so recovery never depends on executor-local blocks (a cluster
+  * overlaps rounds at the storage layer instead). The cumulative
+  * URL-seen table is a union of per-round deltas (never re-read from
+  * disk), and the seen-bloom is merged incrementally from each round's
+  * accepted delta instead of being rebuilt from a full seen scan.
   */
 object CrawlDriver {
 
   private val frontierCols = Seq("seq", "pos", "uri", "origUri", "depth",
     "srcSeq", "method", "expected", "referer", "dataQ")
-
-  /** Session opt-out for the local pipelined write-behind (default on). */
-  private def pipelineConf(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.pipelinedWrite", "true").toBoolean
 
   case class CrawlRun(store: SnapshotStore, lastRound: Int, spark: SparkSession) {
     private def unionKind(name: String): DataFrame =
@@ -112,33 +108,117 @@ object CrawlDriver {
     }
   }
 
-  /** Deferred bootstrap handle (local pipelined path): the accepted
-    * frontier/seen state as in-memory DataFrames plus the counters —
-    * the durable round −1 write+commit rides the write thread and
-    * overlaps world prep and round 0. `release` caches are dropped once
-    * that write has finished and round 0 has consumed the state.
+  /** Next-round state tables, in the order a round pins them. */
+  private case class RoundState(seen: DataFrame, dup: DataFrame,
+      maps: DataFrame, host: DataFrame, frontier: DataFrame)
+
+  /** The crawl's one write pipeline (writes + commits run in submission
+    * order on one background thread, each chained on its predecessor)
+    * and its state re-point. State layout: every cumulative part
+    * (compacted table AND per-round delta) is cached HASH-PARTITIONED
+    * AND SORTED on its join key — the D1/D4 chains in CrawlRound join
+    * the parts one at a time, so the big cumulative side is
+    * Exchange-free every round and only the small per-round
+    * candidate/current sets shuffle (a union-then-join would re-exchange
+    * O(seen) rows per round, the 10^10-scale killer).
     */
-  private case class Boot(frontier: DataFrame, accepted: DataFrame,
-      counters: (Long, Long), delta: DataFrame, release: Seq[DataFrame])
+  private final class WritePipeline(spark: SparkSession, store: SnapshotStore,
+      placement: Placement) {
+    val parts: Int = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    private val ec = ExecutionContext.fromExecutorService(
+      java.util.concurrent.Executors.newSingleThreadExecutor(r => {
+        val t = new Thread(r, "graft-delta-write"); t.setDaemon(true); t
+      }))
+    private var pending: Future[Unit] = Future.successful(())
+    // caches released once the pending write, which reads them, is done
+    private var release: Seq[DataFrame] = Nil
+
+    def seenSel(df: DataFrame): DataFrame =
+      df.select(col("canon").as("uri"), col("method"), col("seq"))
+        .repartition(parts, col("uri"))
+        .sortWithinPartitions("uri", "method")
+    def dupSel(df: DataFrame): DataFrame =
+      df.select(col("size"), col("bhash"), col("bhash2"), col("pop"), col("uri"))
+        .repartition(parts, col("bhash"))
+        .sortWithinPartitions("size", "bhash", "bhash2")
+    // the frontier parquet is small, so a bare read lands in ~1 input
+    // split — an explicit hash repartition keeps the round's narrow
+    // pipeline at full parallelism; partitioning on `uri` doubles as
+    // the fetch-join key so the join reuses this exchange
+    def frontierSel(df: DataFrame): DataFrame =
+      df.select(frontierCols.map(col): _*).repartition(parts, col("uri"))
+    val emptyDup: DataFrame = spark.emptyDataFrame
+      .select(lit(0L).as("size"), lit(0L).as("bhash"), lit(0L).as("bhash2"),
+        lit(0L).as("pop"), lit("").as("uri")).limit(0)
+    val emptyMaps: DataFrame = spark.emptyDataFrame.select(lit("").as("uri")).limit(0)
+    val emptyHost: DataFrame = spark.emptyDataFrame
+      .select(lit("").as("host"), lit(0.0).as("lastVisitS")).limit(0)
+
+    /** Runs `write` (a delta write and its manifest commit) after every
+      * earlier one: a failed write fails every later commit, so the
+      * manifest sequence never has holes. Locally the write overlaps the
+      * caller; on a cluster it has finished on return.
+      */
+    def dispatch(write: => Unit): Future[Unit] = {
+      val w = pending.map(_ => write)(ec)
+      if (!placement.local) Await.result(w, Duration.Inf)
+      w
+    }
+
+    /** Next-round state once round k's write is dispatched: the in-memory
+      * tables locally, the committed parquet on a cluster.
+      */
+    def repoint(round: Int, inMemory: => RoundState): RoundState =
+      if (placement.local) inMemory else stored(round, cumulative = false)
+
+    /** State read from the store: round k's own delta, or the union of
+      * rounds −1..k (`cumulative`, as a resumed crawl starts).
+      */
+    def stored(k: Int, cumulative: Boolean): RoundState = {
+      def kind(name: String): Option[DataFrame] =
+        if (cumulative) store.kindUnion(k, name) else Some(store.kindOf(k, name))
+      RoundState(seenSel(kind("accepted").get).persist(MEMORY_AND_DISK),
+        kind("dup_state").map(dupSel).getOrElse(emptyDup).persist(MEMORY_AND_DISK),
+        kind("known_maps").map(_.select(col("uri"))).getOrElse(emptyMaps)
+          .persist(MEMORY_AND_DISK),
+        store.kindOf(k, "host_state").select("host", "lastVisitS"),
+        frontierSel(store.kindOf(k, "frontier")))
+    }
+
+    /** Ends a round: awaits the PREVIOUS write (its failure surfaces here,
+      * one round late at most), drops the caches it read, and holds
+      * `cached` until `w`, the write that reads them, is done.
+      */
+    def advance(w: Future[Unit], cached: Seq[DataFrame]): Unit = {
+      Await.result(pending, Duration.Inf)
+      release.foreach(_.unpersist(blocking = false))
+      release = cached
+      pending = w
+    }
+
+    /** Makes every dispatched write durable and drops the caches it read. */
+    def drain(): Unit = advance(Future.successful(()), Nil)
+
+    def close(): Unit = ec.shutdown()
+  }
 
   /** Distributed seed bootstrap for wide frontiers (the 10^10-URL
     * shape): same semantics as the serial path — every seed consumes a
     * seq in input order, first occurrence of a canon wins, queue
     * positions are dense over accepted seeds, urlLimit caps the
     * accepted count — but computed as Dataset transformations so a
-    * billion-URL seed list never loops on the driver. In local mode the
-    * write is DEFERRED (returns a [[Boot]]): the forcing count provides
-    * the accepted total, and the caller overlaps the durable write with
-    * world prep + round 0. On a cluster the write+commit stay
-    * synchronous (returns None) — same rule as the round loop.
+    * billion-URL seed list never loops on the driver. The round −1
+    * write goes through the write pipeline like any round's (locally it
+    * overlaps world prep and round 0); returns the counters and the
+    * re-pointed state.
     */
   private def bootstrapDistributed(spark: SparkSession, cfg: CrawlConfig,
-      store: SnapshotStore, seedSource: Option[DataFrame],
-      seedCountHint: Option[Long]): Option[Boot] = {
+      store: SnapshotStore, pipe: WritePipeline, seedSource: Option[DataFrame],
+      seedCountHint: Option[Long]): (store.Counters, RoundState) = {
     import graft.plans.Ranks
     import graft.url.UrlExpressions._
     import spark.implicits._
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val parts = pipe.parts
     // a billion-URL seed list must never exist as a driver Seq: callers
     // at scale pass `seedSource` (columns i: Long unique ascending,
     // raw: String), generated/read distributively. A caller-provided
@@ -164,7 +244,7 @@ object CrawlDriver {
     val first = raw.groupBy(col("canon"))
       .agg(min(struct(col("i"), col("decoded"))).as("f"))
       .select(col("f.i").as("i"), col("canon"), col("f.decoded").as("decoded"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     // bounded rank on the known index range — no sampling pass (a
     // repartitionByRange would re-scan the seed set to sample bounds)
     val ranked = Ranks.withBoundedRank(first, Seq(col("i")), "pos",
@@ -186,34 +266,23 @@ object CrawlDriver {
       .unionByName(asDelta("host_state", -1,
         spark.emptyDataset[HostState].toDF()))
       .coalesce(parts)
+    // the accepted-seed count fills the first/limited caches that the
+    // write and round 0 both read; they are released once both are done
+    val limC = limited.persist(MEMORY_AND_DISK)
+    val n = limC.count()
     // nextSeq advances by the true max assigned seq + 1 = nSeeds only
     // when nSeeds is exact; with a hint it must still be ≥ every
     // consumed seq, which i < nSeeds guarantees for ascending i
-    if (spark.sparkContext.isLocal && pipelineConf(spark)) {
-      // pipelined path: the forcing count replaces the write-job
-      // observation (it fills the first/limited caches the deferred
-      // write and round 0 both read), and the caller dispatches the
-      // durable write behind world prep + round 0
-      val limC = limited.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = limC.count()
-      Some(Boot(frontier, accepted, (nSeeds, n), delta, Seq(first, limC)))
-    } else {
-      val tW = System.nanoTime()
-      // the accepted-seed count rides the write job itself (CollectMetrics
-      // observation) — a separate count would be one more serial job on
-      // the bootstrap critical path
-      val obs = org.apache.spark.sql.Observation("bootstrap")
-      store.writeDelta(-1,
-        delta.observe(obs, sum(when(col("kind") === "frontier", 1L)).as("n")))
-      val n = Option(obs.get.getOrElse("n", null))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      first.unpersist(blocking = false)
-      if (sys.env.contains("SPARK_GRAFT_TRACE"))
-        println(f"[bootstrap] write=${(System.nanoTime() - tW) / 1e9}%.1fs n=$n")
-      store.commit(-1, store.Counters(-1, nSeeds, n, 0L, n, n),
-        Seq(("seeds", 0, n)))
-      None
-    }
+    val cnt = store.Counters(-1, nSeeds, n, 0L, n, n)
+    pipe.advance(pipe.dispatch {
+      store.writeDelta(-1, delta)
+      store.commit(-1, cnt, Seq(("seeds", 0, n)))
+    }, Seq(first, limC))
+    // bootstrap writes no dup/maps/host rows by construction
+    (cnt, pipe.repoint(-1, RoundState(
+      pipe.seenSel(accepted).persist(MEMORY_AND_DISK),
+      pipe.emptyDup.persist(MEMORY_AND_DISK), pipe.emptyMaps.persist(MEMORY_AND_DISK),
+      pipe.emptyHost, pipe.frontierSel(frontier))))
   }
 
   /** Seed bootstrap = round "-1": replicates push(createTransaction(seed))
@@ -265,12 +334,6 @@ object CrawlDriver {
       items.size.toLong), Seq(("seeds", 0, items.size.toLong)))
   }
 
-  private def bloomToBytes(b: BloomFilter): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    b.writeTo(bos)
-    bos.toByteArray
-  }
-
   /** Run (or resume) a crawl; returns a handle over the snapshot dirs.
     *
     * `compactEvery`: every K rounds the cumulative seen/dup/known-maps
@@ -298,580 +361,236 @@ object CrawlDriver {
       /** EXACT seed count (= max(i)+1 of `seedSource`) when the caller
         * knows it — skips the bootstrap's max(i) scan job. Must be
         * exact, not an estimate: it becomes the post-bootstrap nextSeq. */
-      seedCountHint: Option[Long] = None): CrawlRun = {
+      seedCountHint: Option[Long] = None): CrawlRun =
+    crawl(Placement.of(spark), spark, world0, cfg, checkpointDir, useBloom,
+      bloomMinSeen, distBootstrapMin, compactEvery, bloomBudgetBytes,
+      bloomBuckets, seedSource, seedCountHint)
+
+  /** [[crawl]] under an explicit [[Placement]] (tests run the cluster
+    * placement on a local master).
+    */
+  private[frontier] def crawl(placement: Placement, spark: SparkSession,
+      world0: CrawlRound.WorldDF, cfg: CrawlConfig, checkpointDir: String,
+      useBloom: Boolean, bloomMinSeen: Long, distBootstrapMin: Int,
+      compactEvery: Int, bloomBudgetBytes: Long, bloomBuckets: Int,
+      seedSource: Option[DataFrame], seedCountHint: Option[Long]): CrawlRun = {
     val store = new SnapshotStore(checkpointDir, spark)
-    // cluster mode takes reliable per-round checkpoints (CrawlRound f5c)
+    // the cluster placement's reliable checkpoints (f5c, compaction) go
     // into the snapshot store's filesystem
-    if (!spark.sparkContext.isLocal && spark.sparkContext.getCheckpointDir.isEmpty)
+    if (!placement.local && spark.sparkContext.getCheckpointDir.isEmpty)
       spark.sparkContext.setCheckpointDir(s"$checkpointDir/_rdd_checkpoints")
-    val trace0 = sys.env.contains("SPARK_GRAFT_TRACE")
-    val tB = System.nanoTime()
+    val pipe = new WritePipeline(spark, store, placement)
+    try {
+      // entry points with request data stay on the serial bootstrap
+      // (they are config-enumerated, never billions)
+      val (c0, state0) = store.latestCommitted() match {
+        case Some(k) => (store.readCounters(k), pipe.stored(k, cumulative = true))
+        case None if !cfg.seedEntries.exists(_.data.nonEmpty) &&
+            (seedSource.isDefined || cfg.seeds.size >= distBootstrapMin) =>
+          bootstrapDistributed(spark, cfg, store, pipe, seedSource, seedCountHint)
+        case None =>
+          bootstrap(spark, cfg, store)
+          (store.readCounters(-1), pipe.stored(-1, cumulative = true))
+      }
+      var c = c0
+      val parts = pipe.parts
 
-    // ---- pipelined write-behind (local mode): writes + commits run in
-    // submission order on one background thread; each write future is
-    // CHAINED on its predecessor, so a failed write fails every later
-    // commit and the manifest sequence never has holes. At most one
-    // write is in flight (awaited at the end of the next iteration),
-    // which also bounds the cache double-buffer to two rounds.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // spark.graft.pipelinedWrite=false opts a session out (kept on by
-    // default): pipelining targets fat rounds — a tiny many-round world
-    // pays the extra leaf-pinning probe job per round for an overlap
-    // worth less than the job's own driver latency
-    val pipelined = spark.sparkContext.isLocal && pipelineConf(spark)
-    val writeEc = ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-        val t = new Thread(r, "graft-delta-write"); t.setDaemon(true); t
-      }))
-    var pendingWrite: Future[Unit] = Future.successful(())
-    // caches released once the write that reads them has finished: the
-    // round's own persisted intermediates plus the PREVIOUS round's
-    // frontier/host leaves (consumed by this round's forcing jobs)
-    var releaseAfterPending: Seq[DataFrame] = Nil
+      // round-invariant world prep (redirect-resolved fetch map, robots
+      // aggregation), pinned once and shared by every round
+      val prepped0 = CrawlRound.prepare(world0, cfg)
+      val hosts = placement.pinWorld(prepped0.hosts)
+      // one O(1) probe per crawl: delay-free worlds skip politeness joins
+      val hasDelays = hosts.filter(col("d").isNotNull).limit(1).count() > 0
+      // static world tables pinned PRE-PARTITIONED AND SORTED on their
+      // join keys: every round's sort-merge join against them reuses the
+      // pinned partitioning/ordering instead of re-exchanging + re-sorting
+      // the big side each round (the bucketed-table pattern)
+      val world = CrawlRound.PreparedWorld(
+        placement.pinWorld(prepped0.docs.repartition(parts, col("doc_id"))
+          .sortWithinPartitions("doc_id")),
+        placement.pinWorld(prepped0.fetchMap.repartition(parts, col("url"))
+          .sortWithinPartitions("url")),
+        hosts,
+        placement.pinWorld(prepped0.rulesAgg),
+        hasDelays,
+        sitemapsAgg =
+          if (prepped0.sitemapsAgg == null) null
+          else placement.pinWorld(prepped0.sitemapsAgg))
 
-    val boot: Option[Boot] =
-      if (store.latestCommitted().isEmpty) {
-        // entry points with request data stay on the serial path (they
-        // are config-enumerated, never billions)
-        val hasData = cfg.seedEntries.exists(_.data.nonEmpty)
-        if (!hasData && (seedSource.isDefined || cfg.seeds.size >= distBootstrapMin)) {
-          val b = bootstrapDistributed(spark, cfg, store, seedSource, seedCountHint)
-          // deferred path: the round −1 write+commit overlap world prep
-          // and round 0; the loop's write chain is seeded with it
-          b.foreach { bt =>
-            val (nSeeds, n) = bt.counters
-            val cnt = store.Counters(-1, nSeeds, n, 0L, n, n)
-            pendingWrite = Future {
-              store.writeDelta(-1, bt.delta)
-              store.commit(-1, cnt, Seq(("seeds", 0, n)))
-            }(writeEc)
-            releaseAfterPending = bt.release
-          }
-          b
-        } else { bootstrap(spark, cfg, store); None }
-      } else None
-    if (trace0) println(f"[crawl] bootstrap=${(System.nanoTime() - tB) / 1e9}%.1fs" +
-      (if (boot.isDefined) " (write deferred)" else ""))
-    // round-invariant world prep (redirect-resolved fetch map, robots
-    // aggregation), cached once and shared by every round
-    val prepped0 = CrawlRound.prepare(world0, cfg)
-    // local mode pins each world table as a LogicalRDD LEAF (eager
-    // localCheckpoint) rather than a mere persist: a persisted plan
-    // keeps its full logical tree, and the analyzer's full-tree rules —
-    // DeduplicateRelations above all, measured at 41% of total rule
-    // time on a tiny crawl (6.7 s of 16.3 s) — re-walk the whole
-    // world-prep subtree (the heavy one-pass parse, the redirect
-    // doubling joins) on EVERY Dataset op of EVERY round that
-    // references the table; the world compute itself also stops riding
-    // round 0's forcing job (interleaved A/B at 300k docs, local[32]:
-    // 36.5-41.5 s / cpu 576-734 with leaves vs 40.7-47.4 s / cpu
-    // 613-787 persisted). The leaf keeps the repartition/sort layout
-    // (LogicalRDD captures the physical partitioning/ordering — same
-    // mechanism as the compaction leaves), so the per-round sort-merge
-    // joins stay Exchange-free. `spark.graft.worldLeaves=false` opts a
-    // session out: on an interpreted 40-doc smoke world (codegen off,
-    // 4 partitions, synchronous writes) the same change blows the
-    // per-round job fan-out up ~15x (75 → 1161 jobs, 49.5 → 126.7 s —
-    // broadcast subqueries re-expand subtrees the world-tree cache
-    // entries had been collapsing), so SparkEntry's tiny-crawl session
-    // keeps the persist path. Cluster runs keep persist regardless:
-    // lineage must survive executor loss there, and the analysis cost
-    // is a driver constant a long-lived cluster round amortizes.
-    val worldLeaves =
-      spark.conf.get("spark.graft.worldLeaves", "true").toBoolean
-    def pinWorld(df: DataFrame): DataFrame =
-      if (spark.sparkContext.isLocal && worldLeaves)
-        org.apache.spark.sql.graft.shim.capStats(df.localCheckpoint())
-      else df.persist(MEMORY_AND_DISK)
-    val hosts = pinWorld(prepped0.hosts)
-    // one O(1) probe per crawl: delay-free worlds skip politeness joins
-    val hasDelays = hosts.filter(col("d").isNotNull).limit(1).count() > 0
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // static world tables cached PRE-PARTITIONED AND SORTED on their
-    // join keys: every round's sort-merge join against them reuses the
-    // cached partitioning/ordering instead of re-exchanging + re-sorting
-    // the big side each round (the bucketed-table pattern)
-    val world = CrawlRound.PreparedWorld(
-      pinWorld(prepped0.docs.repartition(nParts, col("doc_id"))
-        .sortWithinPartitions("doc_id")),
-      pinWorld(prepped0.fetchMap.repartition(nParts, col("url"))
-        .sortWithinPartitions("url")),
-      hosts,
-      pinWorld(prepped0.rulesAgg),
-      hasDelays,
-      sitemapsAgg =
-        if (prepped0.sitemapsAgg == null) null
-        else pinWorld(prepped0.sitemapsAgg))
+      // ---- cross-round state: the cumulative parts of the
+      // WritePipeline's layout, plus this round's frontier and host state
+      val seenParts = scala.collection.mutable.ArrayBuffer(state0.seen)
+      val dupParts = scala.collection.mutable.ArrayBuffer(state0.dup)
+      val mapParts = scala.collection.mutable.ArrayBuffer(state0.maps)
+      // the flat union remains ONLY for the bloom (re)build, a full-scan
+      // aggregation with no partitioning requirement
+      def seenCum: DataFrame = seenParts.reduce(_ unionByName _)
+      def mapsCum: DataFrame = mapParts.reduce(_ unionByName _)
+      var frontier = state0.frontier
+      var hostState = state0.host
 
-    var last = if (boot.isDefined) -1 else store.latestCommitted().get
-    var c = boot match {
-      case Some(bt) =>
-        val (nSeeds, n) = bt.counters
-        store.Counters(-1, nSeeds, n, 0L, n, n)
-      case None => store.readCounters(last)
-    }
-    val trace = trace0
-    if (trace) println(f"[crawl] prep=${(System.nanoTime() - tB) / 1e9}%.1fs (cumulative)")
+      val lineageMetricNames =
+        Seq("frontierIn", "fetched", "discovered", "deduped", "frontierOut",
+          "volumeBytes")
+      val lineageSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("metric",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("partition",
+          org.apache.spark.sql.types.IntegerType),
+        org.apache.spark.sql.types.StructField("count",
+          org.apache.spark.sql.types.LongType)))
 
-    // ---- cross-round state: parquet-rooted, cumulative parts cached --
-    // Every cumulative part (compacted table AND per-round delta) is
-    // cached HASH-PARTITIONED AND SORTED on its join key: the D1/D4
-    // chains in CrawlRound join the parts one at a time, so the big
-    // cumulative side is Exchange-free every round — only the small
-    // per-round candidate/current sets shuffle. A union-then-join would
-    // re-exchange O(seen) rows per round (UnknownPartitioning), which
-    // is the 10^10-scale killer this layout removes.
-    val parts = nParts
-    def seenSel(df: DataFrame): DataFrame =
-      df.select(col("canon").as("uri"), col("method"), col("seq"))
-        .repartition(parts, col("uri"))
-        .sortWithinPartitions("uri", "method")
-    def dupSel(df: DataFrame): DataFrame =
-      df.select(col("size"), col("bhash"), col("bhash2"), col("pop"), col("uri"))
-        .repartition(parts, col("bhash"))
-        .sortWithinPartitions("size", "bhash", "bhash2")
-    // the frontier parquet is small, so a bare read lands in ~1 input
-    // split — an explicit hash repartition keeps the round's narrow
-    // pipeline at full parallelism; partitioning on `uri` doubles as
-    // the fetch-join key so the join reuses this exchange
-    def frontierSel(df: DataFrame): DataFrame =
-      df.select(frontierCols.map(col): _*).repartition(parts, col("uri"))
-    // with a deferred bootstrap the round −1 parquet is still being
-    // written — state initializes from the in-memory bootstrap frames
-    // (bootstrap writes no dup/maps/host rows by construction)
-    val seenParts = scala.collection.mutable.ArrayBuffer[DataFrame](boot match {
-      case Some(bt) => seenSel(bt.accepted).persist(MEMORY_AND_DISK)
-      case None =>
-        seenSel(store.kindUnion(last, "accepted").get).persist(MEMORY_AND_DISK)
-    })
-    val emptyDup = spark.emptyDataFrame
-      .select(lit(0L).as("size"), lit(0L).as("bhash"), lit(0L).as("bhash2"),
-        lit(0L).as("pop"), lit("").as("uri")).limit(0)
-    val dupParts = scala.collection.mutable.ArrayBuffer[DataFrame](
-      (if (boot.isDefined) None else store.kindUnion(last, "dup_state").map(dupSel))
-        .getOrElse(emptyDup).persist(MEMORY_AND_DISK))
-    val mapParts = scala.collection.mutable.ArrayBuffer[DataFrame](
-      (if (boot.isDefined) None
-       else store.kindUnion(last, "known_maps").map(_.select(col("uri"))))
-        .getOrElse(spark.emptyDataFrame.select(lit("").as("uri")).limit(0))
-        .persist(MEMORY_AND_DISK))
-    // the flat union remains ONLY for the bloom (re)build, a full-scan
-    // aggregation with no partitioning requirement
-    def seenCum: DataFrame = seenParts.reduce(_ unionByName _)
-    def mapsCum: DataFrame = mapParts.reduce(_ unionByName _)
-    var frontier = boot match {
-      case Some(bt) => frontierSel(bt.frontier)
-      case None => frontierSel(store.kindOf(last, "frontier"))
-    }
-    var hostState = boot match {
-      case Some(_) => spark.emptyDataFrame
-        .select(lit("").as("host"), lit(0.0).as("lastVisitS")).limit(0)
-      case None => store.kindOf(last, "host_state").select("host", "lastVisitS")
-    }
+      val prefilter = new SeenPrefilterState(useBloom, bloomMinSeen,
+        compactEvery, bloomBudgetBytes, bloomBuckets,
+        s"$checkpointDir/seen_bloom_buckets", c.seenCount, seenCum, c.round)
+      try {
+        while (c.frontierCount > 0 && (cfg.maxRounds <= 0 || c.round + 1 < cfg.maxRounds)) {
+          val round = c.round + 1
+          val out = CrawlRound.run(spark, world, cfg,
+            CrawlRound.RoundIn(round, frontier, seenParts.toSeq, hostState,
+              dupParts.toSeq, mapsCum,
+              c.nextSeq, c.nextPos, c.seenCount, c.nextPos - c.frontierCount,
+              () => prefilter.current(), placement))
 
-    // ---- incremental seen-bloom (fixed capacity so per-round delta
-    // blooms merge bit-for-bit; oversize seen just raises the FP rate,
-    // which only costs extra exact-verify work — never correctness).
-    // Built/merged ASYNCHRONOUSLY on a daemon thread: the bloom job
-    // rides the executor pool concurrently with the next round's
-    // checkpoint job, so its wall time leaves the per-round fixed
-    // critical path; run() forces the future only where the dedup
-    // stage needs the bytes (correct by construction — the merge always
-    // covers every delta up to the previous round before it is used).
-    val bloomEc = ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-        val t = new Thread(r, "graft-bloom-merge"); t.setDaemon(true); t
-      }))
-    var bloomCapacity = math.max(4L * math.max(bloomMinSeen, 1L), 1L << 20)
-    def fullBloom(src: DataFrame, cap: Long): Option[BloomFilter] =
-      Some(UrlSeen.deserialize(UrlSeen.buildBloom(src,
-        UrlSeen.seenKey(col("uri"), col("method")), cap)))
-    // ---- past-budget prefilter: the bucket-sharded file family. Same
-    // async discipline as the single bloom (one state future, forced by
-    // the NEXT round's dedup-stage construction); epoch dirs live under
-    // the snapshot store, keyed by the round that wrote them.
-    val bloomFamBase = s"$checkpointDir/seen_bloom_buckets"
-    def famCapPerBucket(cap: Long): Long =
-      math.max(64L, cap / math.max(bloomBuckets, 1))
-    def seenKeys(src: DataFrame): DataFrame =
-      src.select(UrlSeen.seenKey(col("uri"), col("method")).as("k"))
-    def buildFamily(src: DataFrame, cap: Long, epoch: Int) = {
-      val f = PartitionedBloom.build(seenKeys(src), bloomFamBase, bloomBuckets,
-        famCapPerBucket(cap), epoch = epoch)
-      PartitionedBloom.gcEpochs(f) // superseded epochs die with the build
-      Some(f)
-    }
-    val singleBloomFits = () => UrlSeen.bloomWithinBudget(bloomCapacity,
-      budgetBytes = bloomBudgetBytes)
-    var famFut: Future[Option[PartitionedBloom.BloomFamily]] =
-      Future.successful(None)
-    var bloomFut: Future[Option[BloomFilter]] = Future.successful(None)
-    // ---- batched family-merge cadence state: deltas since the last
-    // family sync accumulate here (merged into the file family only on
-    // the compaction cadence — a per-round merge touches every bucket
-    // once delta ≫ buckets, i.e. a full family rewrite per round at the
-    // 10^10 design point) and meanwhile ride a small fixed-capacity
-    // "recent" bloom composed with the family
-    // (UrlSeen.CompositePrefilter), so the prefilter still covers every
-    // seen key with no false negatives.
-    val famPendingParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var famPendingCount = 0L
-    var famRecentCap = 0L
-    var famRecentFut: Future[Option[BloomFilter]] = Future.successful(None)
-    def famRecentCapFor(windowEstimate: Long): Long = {
-      // capacity for one compaction window of deltas, clamped to the
-      // broadcast budget — an under-sized recent bloom only raises its
-      // FP rate (more exact-anti-join verification), never correctness
-      val est = math.max(4L * windowEstimate, 1L << 20)
-      val maxItems = math.max(bloomBudgetBytes * 8L * 10L / 192L, 1L << 20)
-      math.min(est, maxItems)
-    }
-    if (useBloom && c.seenCount >= math.max(bloomMinSeen, 1L)) {
-      val src = seenCum; val cap = bloomCapacity
-      if (singleBloomFits()) bloomFut = Future(fullBloom(src, cap))(bloomEc)
-      else if (bloomBuckets > 0)
-        famFut = Future(buildFamily(src, cap, epoch = last))(bloomEc)
-    }
-    def prefilterNow(): Option[UrlSeen.SeenPrefilter] =
-      Await.result(bloomFut, Duration.Inf)
-        .map(b => UrlSeen.SingleBloomPrefilter(bloomToBytes(b)): UrlSeen.SeenPrefilter)
-        .orElse(Await.result(famFut, Duration.Inf).map { fam =>
-          Await.result(famRecentFut, Duration.Inf) match {
-            case Some(r) => UrlSeen.CompositePrefilter(fam.prefilter,
-              UrlSeen.SingleBloomPrefilter(bloomToBytes(r)))
-            case None => fam.prefilter
-          }
-        })
+          // ---- forcing job: ONE action (collect of the tiny per-partition
+          // lineage table) materializes the round's whole compute — the f5c
+          // checkpoint, kids2/accepted/frontierOut caches and their offset
+          // broadcasts — and returns every counter the driver needs, so the
+          // durable write below can leave the critical path
+          val linRows = out.lineage.collect()
+          def metric(name: String): Long =
+            linRows.iterator.filter(_.getString(0) == name).map(_.getLong(2)).sum
+          // every scheme-passing link consumed a seq (dups and over-limit
+          // drops included) — the "discovered" lineage metric counts exactly
+          // those (kids2), so it advances the idno counter
+          val frontierCount = metric("frontierOut")
+          val acceptedCount = metric("deduped")
+          c = store.Counters(round,
+            nextSeq = c.nextSeq + metric("discovered"),
+            nextPos = c.nextPos + frontierCount,
+            popBase = c.popBase + metric("frontierIn"),
+            seenCount = c.seenCount + acceptedCount,
+            frontierCount = frontierCount)
+          val doCompact = compactEvery > 0 && round > 0 &&
+            round % compactEvery == 0 && seenParts.size > 1
 
-    val lineageMetricNames =
-      Seq("frontierIn", "fetched", "discovered", "deduped", "frontierOut",
-        "volumeBytes")
-    val lineageSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("metric",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("partition",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("count",
-        org.apache.spark.sql.types.LongType)))
-
-    while (c.frontierCount > 0 && (cfg.maxRounds <= 0 || c.round + 1 < cfg.maxRounds)) {
-      val round = c.round + 1
-      val tR = System.nanoTime()
-      val out = CrawlRound.run(spark, world, cfg,
-        CrawlRound.RoundIn(round, frontier, seenParts.toSeq, hostState,
-          dupParts.toSeq, mapsCum,
-          c.nextSeq, c.nextPos, c.seenCount, c.nextPos - c.frontierCount,
-          () => prefilterNow()))
-      if (trace0) println(f"[round $round] construct=${(System.nanoTime() - tR) / 1e9}%.1fs")
-
-      // ---- forcing job: ONE action (collect of the tiny per-partition
-      // lineage table) materializes the round's whole compute — the f5c
-      // checkpoint, kids2/accepted/frontierOut caches and their offset
-      // broadcasts — and returns every counter the driver needs, so the
-      // durable write below can leave the critical path
-      val linRows = out.lineage.collect()
-      def metric(name: String): Long =
-        linRows.iterator.filter(_.getString(0) == name).map(_.getLong(2)).sum
-      val tF = System.nanoTime()
-      // every scheme-passing link consumed a seq (dups and over-limit
-      // drops included) — the "discovered" lineage metric counts exactly
-      // those (kids2), so it advances the idno counter
-      val discovered = metric("discovered")
-      val frontierCount = metric("frontierOut")
-      val acceptedCount = metric("deduped")
-      val popped = metric("frontierIn")
-      c = store.Counters(round,
-        nextSeq = c.nextSeq + discovered,
-        nextPos = c.nextPos + frontierCount,
-        popBase = c.popBase + popped,
-        seenCount = c.seenCount + acceptedCount,
-        frontierCount = frontierCount)
-      val lineageRows: Seq[(String, Int, Long)] =
-        lineageMetricNames.map(mn => (mn, 0, metric(mn)))
-      val doCompact = compactEvery > 0 && round > 0 &&
-        round % compactEvery == 0 && seenParts.size > 1
-
-      // ---- next-round state: in-memory lazily-checkpointed deltas
-      // (local) or the committed parquet (cluster, write awaited first).
-      // localCheckpoint(eager=false) truncates each delta's logical plan
-      // to a LogicalRDD leaf AT CONSTRUCTION (keeping the repartition/
-      // sort layout), so per-round plans never re-grow O(rounds); the
-      // probe job materializes the leaves' blocks NOW, while the
-      // previous round's caches they compute from are still alive.
-      // capStats on every leaf: localCheckpoint copies the truncated
-      // plan's statistics into the LogicalRDD, and in an iterative loop
-      // whose round k+1 joins build on round k's leaves, sizeInBytes
-      // compounds multiplicatively (bits × joins-per-round each round)
-      // until Catalyst's stats visitor OOMs the driver on many-round
-      // worlds (seen: polite-slow, ~round 12). The cap bounds each
-      // leaf's stats at Long.MaxValue while keeping small deltas' real
-      // sizes.
-      import org.apache.spark.sql.graft.shim.capStats
-      val lineageLit = spark.createDataFrame(
-        java.util.Arrays.asList(linRows: _*), lineageSchema)
-      val cNow = c
-      val commitLineage = lineageRows ++
-        (if (doCompact) Seq(("compacted", 0, cNow.seenCount)) else Nil)
-      val prevWrite = pendingWrite
-      // ---- the merged delta. Pipelined: dup/maps/host kinds write from
-      // the pinned leaves and the lineage kind from the collected literal
-      // rows, so the background write depends ONLY on this round's caches
-      // and leaves — never on a previous round's. Synchronous: everything
-      // writes from the round outputs (per-partition lineage included),
-      // and the write+commit run BEFORE the re-point reads the parquet.
-      def buildDelta(hostK: DataFrame, dupK: DataFrame, mapsK: DataFrame,
-          linK: DataFrame): DataFrame = Seq(
-        asDelta("frontier", round, out.frontierOut),
-        asDelta("accepted", round, out.accepted),
-        asDelta("transactions", round, out.txDelta),
-        asDelta("links", round, out.links),
-        asDelta("defects", round, out.defects),
-        asDelta("host_state", round, hostK),
-        asDelta("dup_state", round, dupK),
-        asDelta("known_maps", round, mapsK),
-        asDelta("headers", round, out.headers),
-        asDelta("cookies", round, out.cookies),
-        asDelta("lineage", round, linK)
-      ).reduce(_ unionByName _).coalesce(parts)
-      val (seenDelta, frontierNext, hostNext, thisWrite) =
-        if (pipelined) {
-          val sd = capStats(seenSel(out.accepted).localCheckpoint(eager = false))
-          val dd = capStats(dupSel(out.dupStateDelta).localCheckpoint(eager = false))
-          val md = capStats(out.knownMapsDelta.select(col("uri"))
-            .localCheckpoint(eager = false))
-          val hs = capStats(out.hostStateOut.select("host", "lastVisitS")
-            .localCheckpoint(eager = false))
-          // the frontier MUST be a checkpoint leaf too (not a mere
-          // persist): a persisted plan keeps its full lineage, and the
-          // frontier is the one state chain threaded through EVERY
-          // round's plan — un-truncated it grows the analyzed tree
-          // exponentially with rounds (each round references the
-          // frontier in several branches, and analysis copies shared
-          // subtrees per occurrence) until Catalyst planning itself
-          // OOMs on many-round worlds. The checkpoint keeps
-          // frontierSel's hash-partitioning on `uri` (LogicalRDD
-          // captures the physical plan's partitioning), so the J6
-          // fetch join stays Exchange-free.
-          val fn = capStats(frontierSel(out.frontierOut).localCheckpoint(eager = false))
-          // probe: pins the leaves the background write does NOT read —
-          // sd and fn. The other three (hs/dd/md) are exactly the delta
-          // kinds the write itself computes, so their materialization
-          // already rides the write thread; probing them here too (the
-          // round-5 shape probed all five) kept 2 of the probe job's
-          // ~1.5-2.5 s of leaf compute on the per-round critical path
-          // for nothing. (Moving the WHOLE probe onto the write thread
-          // was measured and rejected: the probe then overlaps the next
-          // round's forcing job and the contention costs more than the
-          // barrier saved — interleaved A/B at 300k docs: async 44.9 to
-          // 105 s / +35% cpu_sec vs sync 40.7-47.4 s.) A dd/md
-          // partition the next round's forcing job needs before the
-          // write has cached it is computed under the block manager's
-          // per-partition locks — compute-once either way, and this
-          // round's caches stay alive until that write completes.
-          Seq(sd, fn).map(_.select(lit(1L).as("one")))
-            .reduce(_ union _).count() // probe: one job pins both
-          seenParts += sd
-          dupParts += dd
-          mapParts += md
-          val delta = buildDelta(hs, dd, md, lineageLit)
-          val w = prevWrite.map { _ =>
+          // ---- next-round state, as lazy local leaves ([[Placement]]):
+          // each delta's logical plan is truncated to a LogicalRDD leaf
+          // AT CONSTRUCTION (keeping the repartition/sort layout), so
+          // per-round plans never re-grow O(rounds). The frontier MUST be
+          // a leaf too (not a mere persist): it is the one state chain
+          // threaded through EVERY round's plan, referenced in several
+          // branches, and analysis copies shared subtrees per occurrence —
+          // un-truncated it grows the analyzed tree exponentially with
+          // rounds until Catalyst planning itself OOMs.
+          val next = RoundState(
+            placement.leafLocal(pipe.seenSel(out.accepted)),
+            placement.leafLocal(pipe.dupSel(out.dupStateDelta)),
+            placement.leafLocal(out.knownMapsDelta.select(col("uri"))),
+            placement.leafLocal(out.hostStateOut.select("host", "lastVisitS")),
+            placement.leafLocal(pipe.frontierSel(out.frontierOut)))
+          // probe: one job materializes the leaves the write does NOT
+          // read (seen, frontier) NOW, while the previous round's caches
+          // they compute from are still alive. The other three are delta
+          // kinds the write computes itself, so their materialization
+          // rides the write thread (a partition the next forcing job
+          // needs first is computed under the block manager's
+          // per-partition locks — compute-once either way). Moving the
+          // whole probe onto the write thread was measured and rejected:
+          // it then overlaps the next forcing job and the contention
+          // costs more than the barrier saves (300k docs: 44.9-105 s /
+          // +35% cpu_sec vs 40.7-47.4 s).
+          if (placement.local)
+            Seq(next.seen, next.frontier).map(_.select(lit(1L).as("one")))
+              .reduce(_ union _).count()
+          // the merged delta: dup/maps/host from the state tables and
+          // the lineage from the collected rows, so a local write depends
+          // ONLY on this round's caches and leaves, never a previous
+          // round's
+          val delta = Seq(
+            asDelta("frontier", round, out.frontierOut),
+            asDelta("accepted", round, out.accepted),
+            asDelta("transactions", round, out.txDelta),
+            asDelta("links", round, out.links),
+            asDelta("defects", round, out.defects),
+            asDelta("host_state", round, next.host),
+            asDelta("dup_state", round, next.dup),
+            asDelta("known_maps", round, next.maps),
+            asDelta("headers", round, out.headers),
+            asDelta("cookies", round, out.cookies),
+            asDelta("lineage", round, spark.createDataFrame(
+              java.util.Arrays.asList(linRows: _*), lineageSchema))
+          ).reduce(_ unionByName _).coalesce(parts)
+          val cNow = c
+          val commitLineage = lineageMetricNames.map(mn => (mn, 0, metric(mn))) ++
+            (if (doCompact) Seq(("compacted", 0, cNow.seenCount)) else Nil)
+          val thisWrite = pipe.dispatch {
             store.writeDelta(round, delta)
             store.commit(round, cNow, commitLineage)
-          }(writeEc)
-          (sd, fn, hs, w)
-        } else {
-          // synchronous path (cluster, or session opt-out): durable
-          // write+commit first, then re-point at the committed parquet
-          Await.result(pendingWrite, Duration.Inf)
-          store.writeDelta(round, buildDelta(out.hostStateOut,
-            out.dupStateDelta, out.knownMapsDelta, out.lineage))
-          store.commit(round, cNow, commitLineage)
-          val sd = seenSel(store.kindOf(round, "accepted")).persist(MEMORY_AND_DISK)
-          seenParts += sd
-          dupParts += dupSel(store.kindOf(round, "dup_state")).persist(MEMORY_AND_DISK)
-          mapParts += store.kindOf(round, "known_maps").select(col("uri"))
-            .persist(MEMORY_AND_DISK)
-          (sd, frontierSel(store.kindOf(round, "frontier")),
-            store.kindOf(round, "host_state").select("host", "lastVisitS"),
-            Future.successful(()))
-        }
-      val tW = System.nanoTime()
-
-      // ---- re-point the loop state ------------------------------------
-      frontier = frontierNext
-      hostState = hostNext
-
-      // ---- every K rounds: compact cumulative parts to one table ------
-      if (doCompact) {
-        // sync point: compaction UNPERSISTS the per-round delta leaves,
-        // and the in-flight writes still read this round's dup/maps
-        // leaves (the substituted delta kinds) — drain the pipeline
-        // first. Once per compactEvery rounds, alongside compaction's
-        // own full-union barrier.
-        Await.result(thisWrite, Duration.Inf)
-        def compact(parts: scala.collection.mutable.ArrayBuffer[DataFrame],
-            rekey: DataFrame => DataFrame): Unit = {
-          // materialize the union into one checkpointed leaf (cached
-          // blocks, truncated lineage), then release the per-round parts.
-          // The union is RE-KEYED (hash-partitioned + sorted on the join
-          // key) before the checkpoint — Dataset.checkpoint captures the
-          // physical plan's partitioning/ordering into the LogicalRDD, so
-          // the compacted table keeps joining Exchange-free; one shuffle
-          // per compaction buys shuffle-free rounds until the next one.
-          // localCheckpoint blocks live in executor block managers and
-          // die with a lost executor — on a cluster the truncated
-          // lineage would make the cumulative state unrecoverable, so
-          // use the reliable checkpoint there (same rule as f5c).
-          val u = rekey(parts.reduce(_ unionByName _))
-          val merged = org.apache.spark.sql.graft.shim.capStats(
-            if (spark.sparkContext.isLocal) u.localCheckpoint()
-            else u.checkpoint())
-          parts.foreach(_.unpersist(blocking = false))
-          parts.clear()
-          parts += merged
-        }
-        compact(seenParts, _.repartition(parts, col("uri"))
-          .sortWithinPartitions("uri", "method"))
-        compact(dupParts, _.repartition(parts, col("bhash"))
-          .sortWithinPartitions("size", "bhash", "bhash2"))
-        compact(mapParts, identity)
-        // Counter/lineage invariant (cheap: one count over the blocks
-        // the checkpoint just materialized, once per compactEvery
-        // rounds): the forcing-job-derived `seenCount` must equal the
-        // accepted-row count the compacted state actually holds, because
-        // every subsequent seq/pos assignment builds on it. Drift here
-        // means lost/dup delta rows and must stop the crawl, not shift
-        // it silently.
-        val committedSeen = seenParts.head.count()
-        require(committedSeen == c.seenCount,
-          s"seen-count drift at compaction round $round: committed " +
-            s"$committedSeen rows vs observed counter ${c.seenCount}")
-      }
-
-      // ---- bloom maintenance, dispatched async (awaited by the NEXT
-      // round's dedup-stage construction, so the job overlaps the next
-      // round's checkpoint job). The previous future is already complete
-      // here — this round's run() forced it. Order of preference:
-      // compaction re-size (keep capacity ≥ 4× seen so the FP rate
-      // stays at design level; the rebuild scans the just-compacted
-      // seen table, which already contains this round's delta) →
-      // delta merge → late first build — a bloom MISSING a seen key
-      // would wrongly bypass the exact anti-join, so every path covers
-      // all deltas up to this round.
-      val prevBloom = Await.result(bloomFut, Duration.Inf)
-      val prevFam = Await.result(famFut, Duration.Inf)
-      val seenCumNow = seenCum
-      // window estimate for the recent-delta bloom: this window's actual
-      // total when one just closed, else scaled from this round's delta
-      def famWindowEst(): Long = math.max(
-        math.max(famPendingCount + acceptedCount,
-          acceptedCount * math.max(compactEvery, 1)), bloomMinSeen)
-      def famSyncReset(): Unit = {
-        famRecentCap = famRecentCapFor(famWindowEst())
-        famPendingParts.clear()
-        famPendingCount = 0L
-        famRecentFut = Future.successful(None)
-      }
-      if (doCompact && useBloom && (prevBloom.isDefined || prevFam.isDefined) &&
-          c.seenCount > bloomCapacity / 4) {
-        bloomCapacity = 4L * c.seenCount
-        val cap = bloomCapacity
-        // capacity policy (UrlSeen.bloomWithinBudget): past the
-        // broadcast budget the re-sized single bitset is undeliverable
-        // and an under-sized bloom's FP rate → 1 (a no-op prefilter
-        // that still costs a probe per candidate) — switch to the
-        // bucket-sharded file family (PartitionedBloom), rebuilt at the
-        // new per-bucket capacity from the just-compacted seen table
-        // (which contains every pending delta row); the exact anti-join
-        // band remains the correctness path either way
-        famSyncReset()
-        if (UrlSeen.bloomWithinBudget(cap, budgetBytes = bloomBudgetBytes)) {
-          bloomFut = Future(fullBloom(seenCumNow, cap))(bloomEc)
-          famFut = Future.successful(None)
-        } else {
-          bloomFut = Future.successful(None)
-          famFut =
-            if (bloomBuckets > 0) Future(buildFamily(seenCumNow, cap, round))(bloomEc)
-            else Future.successful(None)
-        }
-      } else if (doCompact && useBloom && prevFam.isDefined) {
-        // ---- batched LSM merge, once per compaction window: all
-        // pending delta keys (this round's included) go into the family
-        // under ONE new epoch — each touched bucket is read+written once
-        // per WINDOW instead of once per round, which is what keeps the
-        // family's maintenance I/O at O(family) per window instead of
-        // O(family) per round at the 10^10 steady state. The recent
-        // bloom resets; superseded epoch files are GC'd with the merge.
-        val fam = prevFam.get
-        val pendingKeys = seenKeys(
-          (famPendingParts.toSeq :+ seenDelta).reduce(_ unionByName _))
-        famSyncReset()
-        famFut = Future({
-          val merged = PartitionedBloom.merge(pendingKeys, fam, round)
-          PartitionedBloom.gcEpochs(merged)
-          Some(merged)
-        })(bloomEc)
-      } else if (useBloom && acceptedCount > 0) (prevBloom, prevFam) match {
-        case (Some(b), _) =>
-          val cap = bloomCapacity
-          bloomFut = Future({
-            b.mergeInPlace(UrlSeen.deserialize(UrlSeen.buildBloom(seenDelta,
-              UrlSeen.seenKey(col("uri"), col("method")), cap)))
-            Some(b)
-          })(bloomEc)
-        case (None, Some(_)) =>
-          // family mode, mid-window: the delta does NOT touch the file
-          // family — it joins the pending set and merges into the
-          // fixed-capacity recent bloom (same capacity across the
-          // window so mergeInPlace composes), which the prefilter ORs
-          // with the family until the next compaction-cadence sync
-          famPendingParts += seenDelta
-          famPendingCount += acceptedCount
-          if (famRecentCap <= 0) famRecentCap = famRecentCapFor(famWindowEst())
-          val cap = famRecentCap
-          val prevRecent = Await.result(famRecentFut, Duration.Inf)
-          famRecentFut = Future({
-            val d = UrlSeen.deserialize(UrlSeen.buildBloom(seenDelta,
-              UrlSeen.seenKey(col("uri"), col("method")), cap))
-            Some(prevRecent match {
-              case Some(r) => r.mergeInPlace(d); r
-              case None => d
-            })
-          })(bloomEc)
-        case (None, None) if c.seenCount >= math.max(bloomMinSeen, 1L) =>
-          val cap = bloomCapacity
-          if (UrlSeen.bloomWithinBudget(cap, budgetBytes = bloomBudgetBytes))
-            bloomFut = Future(fullBloom(seenCumNow, cap))(bloomEc)
-          else if (bloomBuckets > 0) {
-            famSyncReset()
-            famFut = Future(buildFamily(seenCumNow, cap, round))(bloomEc)
           }
-        case _ => ()
-      }
+          val state = pipe.repoint(round, next)
+          seenParts += state.seen
+          dupParts += state.dup
+          mapParts += state.maps
+          frontier = state.frontier
+          hostState = state.host
 
-      // ---- release: await the PREVIOUS round's write (it re-read the
-      // caches scheduled below; its failure surfaces here, one round
-      // late at most), then drop them. This round's caches — read by the
-      // still-in-flight write — wait one more iteration. (Checkpoint
-      // leaves — frontier/host/seen/dup/map deltas — are not in the
-      // CacheManager; their blocks are freed by the ContextCleaner once
-      // the loop stops referencing them, so they need no entry here.)
-      Await.result(prevWrite, Duration.Inf)
-      releaseAfterPending.foreach(_.unpersist(blocking = false))
-      releaseAfterPending = out.cached
-      pendingWrite = thisWrite
-      if (trace)
-        println(f"[round $round] frontierIn=$popped fetched=${metric("fetched")} " +
-          f"plan=${(tF - tR) / 1e9}%.1fs probe=${(tW - tF) / 1e9}%.1fs " +
-          f"rest=${(System.nanoTime() - tW) / 1e9}%.1fs")
-      last = round
-    }
-    // drain the pipeline: the final round's write must be durable before
-    // CrawlRun reads the committed parquet
-    Await.result(pendingWrite, Duration.Inf)
-    releaseAfterPending.foreach(_.unpersist(blocking = false))
-    writeEc.shutdown()
-    CrawlRun(store, last, spark)
+          // ---- every K rounds: compact cumulative parts to one table ----
+          if (doCompact) {
+            // sync point: compaction UNPERSISTS the per-round delta leaves,
+            // and the in-flight write still reads this round's dup/maps
+            // leaves — drain the pipeline first. Once per compactEvery
+            // rounds, alongside compaction's own full-union barrier.
+            Await.result(thisWrite, Duration.Inf)
+            def compact(cum: scala.collection.mutable.ArrayBuffer[DataFrame],
+                rekey: DataFrame => DataFrame): Unit = {
+              // materialize the union into one lineage cut, then release
+              // the per-round parts. The union is RE-KEYED (hash-
+              // partitioned + sorted on the join key) before the cut —
+              // the checkpoint captures the physical plan's partitioning/
+              // ordering into the LogicalRDD, so the compacted table keeps
+              // joining Exchange-free; one shuffle per compaction buys
+              // shuffle-free rounds until the next one.
+              val merged = placement.cut(rekey(cum.reduce(_ unionByName _)), eager = true)
+              cum.foreach(_.unpersist(blocking = false))
+              cum.clear()
+              cum += merged
+            }
+            compact(seenParts, _.repartition(parts, col("uri"))
+              .sortWithinPartitions("uri", "method"))
+            compact(dupParts, _.repartition(parts, col("bhash"))
+              .sortWithinPartitions("size", "bhash", "bhash2"))
+            compact(mapParts, identity)
+            // Counter/lineage invariant (cheap: one count over the blocks
+            // the checkpoint just materialized, once per compactEvery
+            // rounds): the forcing-job-derived `seenCount` must equal the
+            // accepted-row count the compacted state actually holds,
+            // because every subsequent seq/pos assignment builds on it.
+            // Drift here means lost/dup delta rows and must stop the
+            // crawl, not shift it silently.
+            val committedSeen = seenParts.head.count()
+            require(committedSeen == c.seenCount,
+              s"seen-count drift at compaction round $round: committed " +
+                s"$committedSeen rows vs observed counter ${c.seenCount}")
+          }
+
+          // ---- prefilter maintenance, dispatched async (awaited by the
+          // NEXT round's dedup-stage construction); the rebuild paths scan
+          // the just-compacted seen table, which contains this delta
+          prefilter.absorb(round, state.seen, acceptedCount, c.seenCount,
+            seenCum, doCompact)
+
+          // ---- release: this round's caches (read by the in-flight
+          // write) wait one more round. Checkpoint leaves are not in the
+          // CacheManager; the ContextCleaner frees their blocks once the
+          // loop stops referencing them.
+          pipe.advance(thisWrite, out.cached)
+        }
+      } finally prefilter.close()
+      // the final round's write must be durable before CrawlRun reads
+      // the committed parquet
+      pipe.drain()
+      CrawlRun(store, c.round, spark)
+    } finally pipe.close()
   }
 }

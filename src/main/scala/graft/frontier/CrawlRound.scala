@@ -189,7 +189,9 @@ object CrawlRound {
         * job); run() forces it only when the dedup stage is built.
         * Yields the single broadcast bloom within budget, the
         * bucket-sharded family past it, or None (prefilter off). */
-      seenBloom: () => Option[UrlSeen.SeenPrefilter])
+      seenBloom: () => Option[UrlSeen.SeenPrefilter],
+      /** where the round's lineage cuts live (f5c, won, based) */
+      placement: Placement)
 
   case class RoundOut(
       frontierOut: DataFrame,
@@ -399,37 +401,20 @@ object CrawlRound {
         "uriN", "fetchKey", "finalUrl", "redirTarget", "finCanon",
         "url", "finDocId", "tooMany")
 
-    // Every output branches off f5 / kids2 / accepted. f5 is EAGERLY
+    // Every output branches off f5 / kids2 / accepted. f5 is
     // checkpointed (not merely persisted): ~8 output branches reference
     // it, and with a plain persist each branch's logical plan still
     // contains the whole round tree, so the driver re-analyzes/
     // re-optimizes the full DAG per branch — serial time that does not
     // shrink with cores and flattened the round-1 scaling curve. The
-    // checkpoint truncates lineage to a leaf. localCheckpoint lives in
-    // executor block managers (lost on executor failure), so it is only
-    // used in local mode; a cluster run takes a reliable checkpoint to
-    // sparkContext's checkpoint dir (CrawlDriver points it at the
-    // snapshot root).
-    // LAZY in local mode: localCheckpoint(eager=false) truncates the
-    // logical plan to a LogicalRDD leaf at construction (the property
-    // the branches need) while the actual materialization rides the
-    // round's ONE write job instead of a separate up-front job — one
-    // fewer serial job barrier per round. Block-manager per-partition
-    // locks keep it compute-once inside that job. A cluster run still
-    // takes the eager RELIABLE checkpoint: lazy reliable checkpointing
-    // recomputes the pipeline a second time to write the checkpoint
-    // files, and recovery must not depend on executor-local blocks.
+    // checkpoint truncates lineage to a leaf. LAZY locally: the leaf
+    // exists at construction (the property the branches need) while the
+    // materialization rides the round's forcing job instead of a
+    // separate up-front job — one fewer serial job barrier per round
+    // (block-manager per-partition locks keep it compute-once). A
+    // cluster takes the eager reliable checkpoint ([[Placement.cut]]).
     __mark("f5")
-    val tF0 = System.nanoTime()
-    // capStats: bound the leaf's inherited statistics — in the pipelined
-    // driver f5's inputs are the previous round's checkpoint leaves, and
-    // un-capped stats compound multiplicatively across rounds (driver
-    // OOM in Catalyst's stats visitor on many-round worlds).
-    val f5c = org.apache.spark.sql.graft.shim.capStats(
-      if (spark.sparkContext.isLocal) f5.localCheckpoint(eager = false)
-      else f5.checkpoint())
-    if (sys.env.contains("SPARK_GRAFT_TRACE"))
-      println(f"[round ${in.round}] f5cJob=${(System.nanoTime() - tF0) / 1e9}%.1fs")
+    val f5c = in.placement.cut(f5, eager = false)
     __mark("f5c")
     val processed = f5c.filter(!col("defer"))
     val deferred = f5c.filter(col("defer"))
@@ -561,12 +546,7 @@ object CrawlRound {
     // job's broadcast subqueries. A LAZY localCheckpoint truncates it
     // to a leaf at construction (no extra job — materialization rides
     // the forcing job, compute-once under block locks, exactly the f5c
-    // discipline). Local mode only: on a cluster a reliable per-round
-    // checkpoint would be an extra distributed write.
-    def leafLocal(df: DataFrame): DataFrame =
-      if (spark.sparkContext.isLocal)
-        org.apache.spark.sql.graft.shim.capStats(df.localCheckpoint(eager = false))
-      else df
+    // discipline; [[Placement.leafLocal]]).
     val won: Option[DataFrame] =
       if (world.sitemapsAgg == null) None
       else {
@@ -581,7 +561,7 @@ object CrawlRound {
           col("hdepth"), posexplode(col("slocs")).as(Seq("li", "loc")))
         val fresh = cand.join(in.knownMaps.select(col("uri").as("loc")),
           Seq("loc"), "left_anti")
-        Some(leafLocal(fresh.withColumn("rn0",
+        Some(in.placement.leafLocal(fresh.withColumn("rn0",
             row_number().over(Window.partitionBy(col("loc")).orderBy(col("hpos"))))
           .filter(col("rn0") === 1).drop("rn0")
           .withColumn("j",
@@ -609,8 +589,8 @@ object CrawlRound {
     // same rationale as `won`'s leaf: `based` is pasted into the
     // parents join AND the virtual-row build, each copy dragging the
     // counts/prefix-sum subtree (with its offsets broadcast) along
-    val based = leafLocal(Ranks.withBoundedPrefixSum(counts, col("pos"), col("cnt"),
-      "base", in.posLo, in.nextPos)
+    val based = in.placement.leafLocal(Ranks.withBoundedPrefixSum(counts, col("pos"),
+      col("cnt"), "base", in.posLo, in.nextPos)
       .select(col("pos"), col("base"), col("vcnt")))
 
     // parents (slim projection) joined to their first-seq base: the one

@@ -398,14 +398,14 @@ class EngineParitySpec extends AnyFunSuite {
   }
 
   test("parity with the pipelined write-behind OPTED OUT (synchronous path)") {
-    // spark.graft.pipelinedWrite=false routes every round through the
-    // synchronous write+commit+re-read path (the cluster path, also used
-    // by latency-dominated tiny-world sessions) — a many-round world with
-    // politeness keeps that branch output-checked, not just compiling
+    // the cluster placement, run on the local master: no write-behind —
+    // each round's write awaited and the next round re-pointed at the
+    // committed parquet — plus persisted world tables and eager reliable
+    // f5c/compaction checkpoints; a many-round world with politeness
+    // keeps that path output-checked, not just compiling
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.graft.pipelinedWrite", "false")
     val spec = WorldSpec("polite-slow", nHosts = 3, nDocs = 24,
       politeEvery = 2)
     val c = cfg(spec)
@@ -413,9 +413,18 @@ class EngineParitySpec extends AnyFunSuite {
     val w = WorldGen.sparkWorld(s2, spec)
     val wdf = CrawlRound.WorldDF(w.docs.toDF(), w.urlMap.toDF(),
       w.hosts.toDF(), w.rules.toDF(), null)
-    val dir = Files.createTempDirectory("crawl-sync-path").toString
-    val run = CrawlDriver.crawl(s2, wdf, c, dir, useBloom = true, bloomMinSeen = 0L)
+    val dir = Files.createTempDirectory("crawl-cluster-placement").toString
+    val run = CrawlDriver.crawl(Placement(local = false), s2, wdf, c, dir,
+      useBloom = true, bloomMinSeen = 0L, distBootstrapMin = 50000,
+      compactEvery = 8, bloomBudgetBytes = 256L << 20, bloomBuckets = 8192,
+      seedSource = None, seedCountHint = None)
     assertParity(oracle, run)
+    // non-vacuity: the crawl took reliable checkpoints, which only the
+    // cluster placement writes
+    def files(f: java.io.File): Int =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(files).sum else 1
+    assert(files(new java.io.File(s"$dir/_rdd_checkpoints")) > 0,
+      "cluster placement wrote no reliable checkpoint files")
   }
 
   test("parity holds without the bloom prefilter (exact band alone)") {
@@ -525,6 +534,15 @@ class EngineParitySpec extends AnyFunSuite {
       bloomMinSeen = 0L, bloomBudgetBytes = 1L, bloomBuckets = 8)
     val resumed = CrawlDriver.crawl(spark, world(spec), c, dir,
       bloomMinSeen = 0L, bloomBudgetBytes = 1L, bloomBuckets = 8)
+    // every crawl releases its background threads (bloomMinSeen = 0
+    // starts the prefilter's; an in-flight build finishes first, hence
+    // the bounded wait). Checked before the parity collects: a GC there
+    // would finalize an abandoned executor and hide the leak.
+    def graftThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && t.getName.startsWith("graft-")).map(_.getName).toSeq
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (graftThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(graftThreads.isEmpty, s"background threads outlived their crawls: $graftThreads")
     assertParity(oracle, resumed)
   }
 }
