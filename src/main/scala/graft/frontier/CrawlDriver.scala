@@ -7,8 +7,10 @@ import graft.url.UrlFuncs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim.unionByName
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
+import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
@@ -130,8 +132,10 @@ object CrawlDriver {
         val t = new Thread(r, "graft-delta-write"); t.setDaemon(true); t
       }))
     private var pending: Future[Unit] = Future.successful(())
-    // caches released once the pending write, which reads them, is done
-    private var release: Seq[DataFrame] = Nil
+    // caches and per-round host tables released once the pending write,
+    // which reads them, is done
+    private var heldCaches: Seq[DataFrame] = Nil
+    private var heldTables: Seq[HostTable] = Nil
 
     def seenSel(df: DataFrame): DataFrame =
       df.select(col("canon").as("uri"), col("method"), col("seq"))
@@ -186,20 +190,37 @@ object CrawlDriver {
     }
 
     /** Ends a round: awaits the PREVIOUS write (its failure surfaces here,
-      * one round late at most), drops the caches it read, and holds
-      * `cached` until `w`, the write that reads them, is done.
+      * one round late at most), drops the caches and host tables it
+      * read, and holds `cached`/`tables` until `w`, the write that reads
+      * them, is done.
       */
-    def advance(w: Future[Unit], cached: Seq[DataFrame]): Unit = {
+    def advance(w: Future[Unit], cached: Seq[DataFrame],
+        tables: Seq[HostTable] = Nil): Unit = {
       Await.result(pending, Duration.Inf)
-      release.foreach(_.unpersist(blocking = false))
-      release = cached
+      free()
+      heldCaches = cached
+      heldTables = tables
       pending = w
+    }
+
+    private def free(): Unit = {
+      heldCaches.foreach(_.unpersist(blocking = false))
+      heldTables.foreach(_.destroy())
+      heldCaches = Nil
+      heldTables = Nil
     }
 
     /** Makes every dispatched write durable and drops the caches it read. */
     def drain(): Unit = advance(Future.successful(()), Nil)
 
-    def close(): Unit = ec.shutdown()
+    /** Stops the write thread once the in-flight write has ended (a
+      * failed one has already failed the crawl) and frees what it held.
+      */
+    def close(): Unit = {
+      scala.util.Try(Await.result(pending, Duration.Inf))
+      free()
+      ec.shutdown()
+    }
   }
 
   /** Distributed seed bootstrap for wide frontiers (the 10^10-URL
@@ -261,10 +282,9 @@ object CrawlDriver {
     val accepted = limited.select(col("i").as("seq"), lit("GET").as("method"),
       col("canon"), col("decoded"), lit(0).as("depth"),
       lit(null).cast("string").as("expected"))
-    val delta = asDelta("frontier", -1, frontier)
-      .unionByName(asDelta("accepted", -1, accepted))
-      .unionByName(asDelta("host_state", -1,
-        spark.emptyDataset[HostState].toDF()))
+    val delta = unionByName(Seq(asDelta("frontier", -1, frontier),
+        asDelta("accepted", -1, accepted),
+        asDelta("host_state", -1, spark.emptyDataset[HostState].toDF())))
       .coalesce(parts)
     // the accepted-seed count fills the first/limited caches that the
     // write and round 0 both read; they are released once both are done
@@ -325,10 +345,10 @@ object CrawlDriver {
     val paramsDf = params.toSeq.map(p => (p.seq, p.key, p.value))
       .toDF("seq", "pkey", "pvalue")
     val hostState = spark.emptyDataset[HostState].toDF()
-    store.writeDelta(-1, asDelta("frontier", -1, frontier)
-      .unionByName(asDelta("accepted", -1, accepted))
-      .unionByName(asDelta("params", -1, paramsDf))
-      .unionByName(asDelta("host_state", -1, hostState))
+    store.writeDelta(-1, unionByName(Seq(asDelta("frontier", -1, frontier),
+        asDelta("accepted", -1, accepted),
+        asDelta("params", -1, paramsDf),
+        asDelta("host_state", -1, hostState)))
       .coalesce(1))
     store.commit(-1, store.Counters(-1, nextSeq, nextPos, 0L, seen.size.toLong,
       items.size.toLong), Seq(("seeds", 0, items.size.toLong)))
@@ -380,6 +400,16 @@ object CrawlDriver {
     if (!placement.local && spark.sparkContext.getCheckpointDir.isEmpty)
       spark.sparkContext.setCheckpointDir(s"$checkpointDir/_rdd_checkpoints")
     val pipe = new WritePipeline(spark, store, placement)
+    // ---- cross-round state: the cumulative parts of the WritePipeline's
+    // layout (seeded below with the recovered or bootstrapped state).
+    // These, the world tables and the round in flight are the crawl's
+    // own caches and lookups: all are released when `crawl` returns,
+    // also on failure, so no later query in the session checks them.
+    val seenParts = ArrayBuffer.empty[DataFrame]
+    val dupParts = ArrayBuffer.empty[DataFrame]
+    val mapParts = ArrayBuffer.empty[DataFrame]
+    var world: CrawlRound.PreparedWorld = null
+    var inFlight: Option[CrawlRound.RoundOut] = None
     try {
       // entry points with request data stay on the serial bootstrap
       // (they are config-enumerated, never billions)
@@ -395,37 +425,27 @@ object CrawlDriver {
       var c = c0
       val parts = pipe.parts
 
-      // round-invariant world prep (redirect-resolved fetch map, robots
-      // aggregation), pinned once and shared by every round
-      val prepped0 = CrawlRound.prepare(world0, cfg)
-      val hosts = placement.pinWorld(prepped0.hosts)
-      // one O(1) probe per crawl: delay-free worlds skip politeness joins
-      val hasDelays = hosts.filter(col("d").isNotNull).limit(1).count() > 0
-      // static world tables pinned PRE-PARTITIONED AND SORTED on their
-      // join keys: every round's sort-merge join against them reuses the
-      // pinned partitioning/ordering instead of re-exchanging + re-sorting
-      // the big side each round (the bucketed-table pattern)
-      val world = CrawlRound.PreparedWorld(
-        placement.pinWorld(prepped0.docs.repartition(parts, col("doc_id"))
-          .sortWithinPartitions("doc_id")),
-        placement.pinWorld(prepped0.fetchMap.repartition(parts, col("url"))
-          .sortWithinPartitions("url")),
-        hosts,
-        placement.pinWorld(prepped0.rulesAgg),
-        hasDelays,
-        sitemapsAgg =
-          if (prepped0.sitemapsAgg == null) null
-          else placement.pinWorld(prepped0.sitemapsAgg))
+      seenParts += state0.seen
+      dupParts += state0.dup
+      mapParts += state0.maps
 
-      // ---- cross-round state: the cumulative parts of the
-      // WritePipeline's layout, plus this round's frontier and host state
-      val seenParts = scala.collection.mutable.ArrayBuffer(state0.seen)
-      val dupParts = scala.collection.mutable.ArrayBuffer(state0.dup)
-      val mapParts = scala.collection.mutable.ArrayBuffer(state0.maps)
+      // round-invariant world prep (redirect-resolved fetch map, the
+      // per-host lookup table collected once), shared by every round.
+      // Static world tables are pinned PRE-PARTITIONED AND SORTED on
+      // their join keys: every round's sort-merge join against them
+      // reuses the pinned partitioning/ordering instead of re-exchanging
+      // + re-sorting the big side each round (the bucketed-table pattern)
+      world = CrawlRound.prepare(world0, cfg)
+      world = world.copy(
+        docs = placement.pinWorld(world.docs.repartition(parts, col("doc_id"))
+          .sortWithinPartitions("doc_id")),
+        fetchMap = placement.pinWorld(world.fetchMap.repartition(parts, col("url"))
+          .sortWithinPartitions("url")))
+
       // the flat union remains ONLY for the bloom (re)build, a full-scan
       // aggregation with no partitioning requirement
-      def seenCum: DataFrame = seenParts.reduce(_ unionByName _)
-      def mapsCum: DataFrame = mapParts.reduce(_ unionByName _)
+      def seenCum: DataFrame = unionByName(seenParts.toSeq)
+      def mapsCum: DataFrame = unionByName(mapParts.toSeq)
       var frontier = state0.frontier
       var hostState = state0.host
 
@@ -451,6 +471,7 @@ object CrawlDriver {
               dupParts.toSeq, mapsCum,
               c.nextSeq, c.nextPos, c.seenCount, c.nextPos - c.frontierCount,
               () => prefilter.current(), placement))
+          inFlight = Some(out)
 
           // ---- forcing job: ONE action (collect of the tiny per-partition
           // lineage table) materializes the round's whole compute — the f5c
@@ -507,7 +528,7 @@ object CrawlDriver {
           // the lineage from the collected rows, so a local write depends
           // ONLY on this round's caches and leaves, never a previous
           // round's
-          val delta = Seq(
+          val delta = unionByName(Seq(
             asDelta("frontier", round, out.frontierOut),
             asDelta("accepted", round, out.accepted),
             asDelta("transactions", round, out.txDelta),
@@ -520,7 +541,7 @@ object CrawlDriver {
             asDelta("cookies", round, out.cookies),
             asDelta("lineage", round, spark.createDataFrame(
               java.util.Arrays.asList(linRows: _*), lineageSchema))
-          ).reduce(_ unionByName _).coalesce(parts)
+          )).coalesce(parts)
           val cNow = c
           val commitLineage = lineageMetricNames.map(mn => (mn, 0, metric(mn))) ++
             (if (doCompact) Seq(("compacted", 0, cNow.seenCount)) else Nil)
@@ -542,8 +563,7 @@ object CrawlDriver {
             // leaves — drain the pipeline first. Once per compactEvery
             // rounds, alongside compaction's own full-union barrier.
             Await.result(thisWrite, Duration.Inf)
-            def compact(cum: scala.collection.mutable.ArrayBuffer[DataFrame],
-                rekey: DataFrame => DataFrame): Unit = {
+            def compact(cum: ArrayBuffer[DataFrame], rekey: DataFrame => DataFrame): Unit = {
               // materialize the union into one lineage cut, then release
               // the per-round parts. The union is RE-KEYED (hash-
               // partitioned + sorted on the join key) before the cut —
@@ -551,7 +571,7 @@ object CrawlDriver {
               // ordering into the LogicalRDD, so the compacted table keeps
               // joining Exchange-free; one shuffle per compaction buys
               // shuffle-free rounds until the next one.
-              val merged = placement.cut(rekey(cum.reduce(_ unionByName _)), eager = true)
+              val merged = placement.cut(rekey(unionByName(cum.toSeq)), eager = true)
               cum.foreach(_.unpersist(blocking = false))
               cum.clear()
               cum += merged
@@ -580,17 +600,33 @@ object CrawlDriver {
           prefilter.absorb(round, state.seen, acceptedCount, c.seenCount,
             seenCum, doCompact)
 
-          // ---- release: this round's caches (read by the in-flight
-          // write) wait one more round. Checkpoint leaves are not in the
-          // CacheManager; the ContextCleaner frees their blocks once the
-          // loop stops referencing them.
-          pipe.advance(thisWrite, out.cached)
+          // ---- release: this round's caches and host tables (read by
+          // the in-flight write) wait one more round. Checkpoint leaves
+          // are not in the CacheManager; the ContextCleaner frees their
+          // blocks once the loop stops referencing them.
+          pipe.advance(thisWrite, out.cached, out.hostTables)
+          inFlight = None
         }
       } finally prefilter.close()
       // the final round's write must be durable before CrawlRun reads
       // the committed parquet
       pipe.drain()
       CrawlRun(store, c.round, spark)
-    } finally pipe.close()
+    } finally {
+      pipe.close()
+      inFlight.foreach { o =>
+        o.cached.foreach(_.unpersist(blocking = false))
+        o.hostTables.foreach(_.destroy())
+      }
+      // persisted parts (recovered, bootstrapped or re-read state) and
+      // the cluster's persisted world tables; unpersisting a leaf is a
+      // no-op
+      (seenParts ++ dupParts ++ mapParts).foreach(_.unpersist(blocking = false))
+      if (world != null) {
+        world.docs.unpersist(blocking = false)
+        world.fetchMap.unpersist(blocking = false)
+        world.hosts.destroy()
+      }
+    }
   }
 }

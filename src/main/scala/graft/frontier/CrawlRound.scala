@@ -8,6 +8,8 @@ import graft.url.UrlExpressions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim.unionByName
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
 
 /** One crawl round as a pure DataFrame transformation (SURVEY.md §7.5).
   *
@@ -25,7 +27,13 @@ import org.apache.spark.sql.functions._
   * orderings via [[Ranks.withGlobalRank]] (range-partitioned, never a
   * single-partition window); per-host windows partition by host (the
   * salted host-partitioning axis); URL-seen dedup = bloom prefilter +
-  * exact anti-join ([[UrlSeen]]); rule/host tables broadcast.
+  * exact anti-join ([[UrlSeen]]). Per-host tables are LOOKUPS, never
+  * joins: robots rules, crawl delay and sitemap locs are collected once
+  * per crawl into one [[HostTable]], and a polite round's host state
+  * (previous visit times + this round's first successes) into one
+  * per-round table from one job; rows probe them with the native
+  * [[HostLookup]] expression. No round plans a string-keyed broadcast
+  * hash join (each allocated a 16 MB page per relation).
   */
 object CrawlRound {
 
@@ -35,7 +43,8 @@ object CrawlRound {
 
   /** Round-invariant world prep, computed once per crawl: redirects
     * pre-resolved into the fetch table (single join per round instead of
-    * two), robots rules pre-grouped per host, and — the big one — the
+    * two), the per-host attributes (robots rules grouped per host, crawl
+    * delay, sitemap locs) collected into one [[HostTable]], and — the big one — the
     * documents PARSED ONCE into a slim per-doc feature row (`docs` here
     * is the SLIM table): link-ish spans, body hash, canonical target,
     * and the ungated tagged checker-defect array
@@ -44,16 +53,19 @@ object CrawlRound {
     * per-round join/cache — at 100 TB the parse is one streaming pass
     * over the corpus and every BSP round moves only extracted features,
     * which is also what keeps the round pipeline inside the machine's
-    * memory bandwidth at high core counts. `hasDelays` lets the round
-    * skip the whole politeness machinery (host-state join +
-    * first-success aggregation) for worlds without crawl delays.
+    * memory bandwidth at high core counts.
+    *
+    * `hosts` values: `rrules` (agent-scoped robots rules), `d` (crawl
+    * delay) and `slocs` (sitemap locs, lexicographically sorted — the
+    * declared iteration order for robots.py:76-80's set diff). A world
+    * where no host has a delay skips the whole politeness machinery
+    * (host-state table + first-success aggregation); one with no
+    * sitemap locs skips the robots-sitemap machinery.
     */
-  case class PreparedWorld(docs: DataFrame, fetchMap: DataFrame, hosts: DataFrame,
-      rulesAgg: DataFrame, hasDelays: Boolean = true,
-      /** per-host sitemap loc lists, lexicographically sorted (the
-        * declared iteration order for robots.py:76-80's set diff);
-        * null => world has no sitemaps table */
-      sitemapsAgg: DataFrame = null)
+  case class PreparedWorld(docs: DataFrame, fetchMap: DataFrame, hosts: HostTable) {
+    def hasDelays: Boolean = hosts.hasAny("d")
+    def hasSitemaps: Boolean = hosts.hasAny("slocs")
+  }
 
   private val cookieArrayType =
     "array<struct<name:string,value:string,secure:boolean,httpOnly:boolean,path:string>>"
@@ -111,10 +123,17 @@ object CrawlRound {
     // via reppy; oracle applies the identical filter)
     val rulesAgg = w.rules.where(col("agent") === "*" || col("agent") === cfg.agent)
       .groupBy("host").agg(collect_list(struct(col("rule"), col("path_pref"))).as("rrules"))
-    val smAgg =
-      if (w.sitemaps == null) null
-      else w.sitemaps.groupBy("host")
-        .agg(sort_array(collect_list(col("loc"))).as("slocs"))
+    val rrulesType = rulesAgg.schema("rrules").dataType
+    val noRules = lit(null).cast(rrulesType).as("rrules")
+    val noDelay = lit(null).cast(DoubleType).as("d")
+    val noLocs = lit(null).cast("array<string>").as("slocs")
+    // one job collects every per-host attribute as a union of the three
+    // sources (O(hosts), as the broadcast joins they replace assumed)
+    val hosts = HostTable.collect(unionByName(Seq(
+      w.hosts.select(col("host"), noRules, col("crawl_delay_s").cast(DoubleType).as("d"), noLocs),
+      rulesAgg.select(col("host"), col("rrules"), noDelay, noLocs)) ++
+      Option(w.sitemaps).map(_.groupBy("host")
+        .agg(noRules, noDelay, sort_array(collect_list(col("loc"))).as("slocs")))))
     // ---- one-pass parse: heavy spans → slim per-doc features ---------
     val sortedSpans = expr(
       "array_sort(spans, (l, r) -> case when l.offset < r.offset then -1 " +
@@ -163,9 +182,7 @@ object CrawlRound {
           .getField("text").as("canonText"),
         Checks.pageDefectsPre(col("spansSorted")).as("preDef"),
         lit(true).as("hasSpans"))
-    PreparedWorld(docsSlim, fetchMap,
-      w.hosts.select(col("host"), col("crawl_delay_s").as("d")), rulesAgg,
-      sitemapsAgg = smAgg)
+    PreparedWorld(docsSlim, fetchMap, hosts)
   }
 
   case class RoundIn(
@@ -207,7 +224,8 @@ object CrawlRound {
       headers: DataFrame, // seq, hname, hvalue (G4; empty if !recordHeaders)
       cookies: DataFrame, // seq, cname, cvalue, csecure, chttpOnly, cpath (G5)
       lineage: DataFrame, // metric, partition, count
-      cached: Seq[DataFrame]) // persisted intermediates; unpersist after commit
+      cached: Seq[DataFrame], // persisted intermediates; unpersist after commit
+      hostTables: Seq[HostTable]) // per-round lookups; destroy with `cached`
 
   private val LinkKinds = Seq("link", "css-link", "img", "iframe", "frame")
 
@@ -219,7 +237,6 @@ object CrawlRound {
       println(f"[run ${in.round}] $s=${(now - __t) / 1e9}%.2fs")
       __t = now
     }
-    import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
     // round-varying plan parameters ride the codegen references array
     // (graft.plans.Dyn) so every BSP round reuses the same compiled
     // classes instead of paying a fresh janino compile
@@ -235,9 +252,8 @@ object CrawlRound {
     val worthCol: Column = cfg.uriRegexes.map(r => col("uri").rlike("^(?:" + r + ")"))
       .reduceOption(_ || _).getOrElse(lit(false))
 
-    // robots rules per host, broadcast; longest-prefix match, allow wins
+    // robots rules per host (looked up); longest-prefix match, allow wins
     // ties (reppy semantics; robots.py:40-63) — pure array expressions.
-    val rulesAgg = world.rulesAgg
     val disallowedCol: Column = {
       val matching = filter(col("rrules"), r => startswith(col("pathq"), r.getField("path_pref")))
       val best = try_element_at(array_sort(transform(matching, r => struct(
@@ -262,7 +278,9 @@ object CrawlRound {
       .withColumns(ListMap(
         "host" -> url_host(col("uri")),
         "pathq" -> url_pathq(col("uri"))))
-      .join(broadcast(rulesAgg), Seq("host"), "left")
+      .withColumns(ListMap(
+        "rrules" -> world.hosts(col("host")).getField("rrules"),
+        "d" -> world.hosts(col("host")).getField("d")))
       .withColumns(ListMap(
         "gate" ->
           when(!url_is_valid(col("uri")), "invalid")
@@ -316,23 +334,28 @@ object CrawlRound {
       .withColumn("wouldSucceed", col("fetchClass") === "ok")
 
     // ---- politeness (virtual clock; declared model, oracle §deviations)
-    // Per-host first-success via a partial-aggregating groupBy + join
-    // back (map-side combine makes the hot-host key skew-safe — a
+    // Per-host first-success via a partial-aggregating groupBy (map-side
+    // combine makes the hot-host key skew-safe — a
     // Window.partitionBy(host) would pull every hot-host row into one
-    // task). Worlds without crawl delays skip the machinery entirely.
-    val f4 = if (!world.hasDelays) {
-      f3.withColumn("d", lit(null).cast(DoubleType))
-        .withColumn("hvt", lit(null).cast(DoubleType))
-        .withColumn("defer", lit(false))
+    // task), merged with the previous visit times into ONE per-round
+    // host table: one O(hosts) collect, probed per row. Only delayed
+    // hosts' first successes matter (`defer` needs d). Worlds without
+    // crawl delays skip the machinery entirely.
+    val (f4, roundTables) = if (!world.hasDelays) {
+      (f3.withColumns(ListMap(
+        "hvt" -> lit(null).cast(DoubleType),
+        "defer" -> lit(false))), Nil)
     } else {
-      val withHost = f3
-        .join(broadcast(world.hosts), Seq("host"), "left")
-        .join(broadcast(in.hostState.select(col("host"), col("lastVisitS").as("hvt"))),
-          Seq("host"), "left")
-      val firstSucc = withHost
-        .filter(col("wouldSucceed") && col("gate") === "pass")
-        .groupBy("host").agg(min(col("pos")).as("firstSuccPos"))
-      withHost.join(broadcast(firstSucc), Seq("host"), "left")
+      val firstSucc = f3
+        .filter(col("wouldSucceed") && col("gate") === "pass" && col("d").isNotNull)
+        .groupBy("host").agg(min(col("pos")).as("fsp"))
+        .select(col("host"), lit(null).cast(DoubleType).as("hvt"), col("fsp"))
+      val prior = in.hostState.select(col("host"), col("lastVisitS").as("hvt"),
+        lit(null).cast("long").as("fsp"))
+      val state = HostTable.collect(unionByName(Seq(prior, firstSucc)))
+      (f3.withColumns(ListMap(
+          "hvt" -> state(col("host")).getField("hvt"),
+          "firstSuccPos" -> state(col("host")).getField("fsp")))
         .withColumn("defer",
           (col("gate") === "pass") && col("d").isNotNull && (
             when(col("hvt").isNotNull && col("d") <= bound, lit(false))
@@ -341,7 +364,8 @@ object CrawlRound {
               .when(col("hvt").isNotNull,
                 col("firstSuccPos").isNotNull && col("pos") > col("firstSuccPos"))
               .otherwise((col("d") > bound) &&
-                col("firstSuccPos").isNotNull && col("pos") > col("firstSuccPos"))))
+                col("firstSuccPos").isNotNull && col("pos") > col("firstSuccPos")))),
+        Seq(state))
     }
 
     __mark("f2f4")
@@ -399,7 +423,7 @@ object CrawlRound {
             col("locsRaw"))))
       .drop("doc_id", "preDef", "canonText", "rrules", "linkSpans", "locsRaw",
         "uriN", "fetchKey", "finalUrl", "redirTarget", "finCanon",
-        "url", "finDocId", "tooMany")
+        "url", "finDocId", "tooMany", "firstSuccPos")
 
     // Every output branches off f5 / kids2 / accepted. f5 is
     // checkpointed (not merely persisted): ~8 output branches reference
@@ -457,8 +481,7 @@ object CrawlRound {
         concat(lit("Expected: "), col("expected"), lit(" Got: "), col("ct")), 0.8),
       defectDf(col("fetchClass") === "ok" && col("finMime").isNotNull &&
         col("finMime") =!= col("ct"), 3, col("seq"), "type-mishmash",
-        concat(lit("Declared "), col("ct"), lit(",detected "), col("finMime")), 0.3)
-    ).reduce(_ unionByName _)
+        concat(lit("Declared "), col("ct"), lit(",detected "), col("finMime")), 0.3))
 
     __mark("defects")
     // ---- checker plugins over OK pages (phases 4..11, Checks) --------
@@ -477,13 +500,13 @@ object CrawlRound {
     // dupCur shuffles once, then streams through the chain; the final
     // min-aggregate over the unioned (tiny) hit sets recovers the
     // earliest prior exactly as the single-join form did
-    val dupHits = (in.dupState :+ dupStateDelta).map { part =>
+    val dupHits = unionByName((in.dupState :+ dupStateDelta).map { part =>
       val p = part.select(col("size"), col("bhash"), col("bhash2"),
         col("pop").as("p_pop"), col("uri").as("p_uri"))
       dupCur.join(p, Seq("size", "bhash", "bhash2"))
         .filter(col("p_uri") =!= col("uri") && col("p_pop") < col("pos"))
         .select(col("pos"), col("seq"), col("p_pop"), col("p_uri"))
-    }.reduce(_ unionByName _)
+    })
     val dupDefects = dupHits
       .groupBy(col("pos"), col("seq"))
       .agg(min(struct(col("p_pop"), col("p_uri"))).as("first"))
@@ -501,17 +524,19 @@ object CrawlRound {
         Checks.gateCol(cfg, "sitemap_scanner", col("ct"), col("uriOk")) &&
         col("hasSpans") && col("nlocs") > 0)
     val sizeFired = col("finLen") > cfg.sitemapMaxSize
-    val smDefects = smPages.filter(sizeFired).select(
+    val smDefects = Seq(
+      smPages.filter(sizeFired).select(
         col("pos").as("popPos"), lit(12).as("phase"), col("seq").as("responseSeq"),
         lit("sitemapsize").as("typeName"), col("finLen").cast(StringType).as("evidence"),
-        lit(0.6).as("severity"), lit(0).as("sub"))
-      .unionByName(smPages.filter(col("nlocs") > cfg.sitemapMaxRecords).select(
+        lit(0.6).as("severity"), lit(0).as("sub")),
+      smPages.filter(col("nlocs") > cfg.sitemapMaxRecords).select(
         col("pos").as("popPos"), lit(12).as("phase"), col("seq").as("responseSeq"),
         lit("sitemaprecords").as("typeName"), col("nlocs").cast(StringType).as("evidence"),
         lit(0.6).as("severity"),
         when(sizeFired, 1).otherwise(0).as("sub")))
-    val checkerDefects = dupDefects.unionByName(Checks.pageDefects(okHtmlChk))
-      .unionByName(smDefects)
+    // every defect kind of the round in one union (one analyzer pass)
+    val allDefects = unionByName(
+      defects ++ (dupDefects +: Checks.pageDefects(okHtmlChk) +: smDefects))
 
     __mark("checkers")
     // ---- link explode (G1/G2/G3) with ARITHMETIC seq assignment ------
@@ -548,10 +573,11 @@ object CrawlRound {
     // the forcing job, compute-once under block locks, exactly the f5c
     // discipline; [[Placement.leafLocal]]).
     val won: Option[DataFrame] =
-      if (world.sitemapsAgg == null) None
+      if (!world.hasSitemaps) None
       else {
         val sitePops = f5c.filter(col("gate") === "pass")
-          .join(broadcast(world.sitemapsAgg), Seq("host"))
+          .withColumn("slocs", world.hosts(col("host")).getField("slocs"))
+          .filter(col("slocs").isNotNull)
           .groupBy(col("host"))
           .agg(min(struct(col("pos"), col("seq"), col("depth"))).as("f"),
             first(col("slocs")).as("slocs"))
@@ -688,8 +714,7 @@ object CrawlRound {
     }
 
     __mark("smvirt")
-    val kids2 = (Seq(kids1, smLocKids) ++ smVirtualKids.toSeq)
-      .reduce(_ unionByName _)
+    val kids2 = unionByName(Seq(kids1, smLocKids) ++ smVirtualKids.toSeq)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     __mark("kids2")
@@ -809,20 +834,21 @@ object CrawlRound {
     val volume = processed.filter(col("wouldSucceed"))
       .select(lit("volumeBytes").as("metric"), spark_partition_id().as("partition"),
         coalesce(col("finLen"), lit(0L)).as("w"))
-    val lineage = lin(in.frontier, "frontierIn")
-      .unionByName(lin(processed.filter(col("wouldSucceed")), "fetched"))
-      .unionByName(lin(kids2, "discovered"))
-      .unionByName(lin(acceptedC, "deduped"))
-      .unionByName(lin(frontierOut, "frontierOut"))
-      .unionByName(volume)
+    val lineage = unionByName(Seq(lin(in.frontier, "frontierIn"),
+        lin(processed.filter(col("wouldSucceed")), "fetched"),
+        lin(kids2, "discovered"),
+        lin(acceptedC, "deduped"),
+        lin(frontierOut, "frontierOut"),
+        volume))
       .groupBy(col("metric"), col("partition"))
       .agg(sum(col("w")).as("count"))
       .select("metric", "partition", "count")
 
     __mark("lineage")
     RoundOut(frontierOut, acceptedOut, txProcessed, links,
-      defects.unionByName(checkerDefects), hostStateOut,
+      allDefects, hostStateOut,
       dupStateDelta, knownMapsDelta, headersOut, cookiesOut, lineage,
-      cached = Seq(f5c, kids2, acceptedC, frontierOut))
+      cached = Seq(f5c, kids2, acceptedC, frontierOut),
+      hostTables = roundTables)
   }
 }

@@ -3,6 +3,7 @@ package graft.frontier
 import graft.seen.{PartitionedBloom, UrlSeen}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.shim.unionByName
 import org.apache.spark.util.sketch.BloomFilter
 
 import scala.collection.mutable.ArrayBuffer
@@ -15,8 +16,12 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * an oversize seen set only raises the false-positive rate, which costs
   * exact-verify work, never correctness.
   *
-  * Within the broadcast budget it is one fixed-capacity bloom (per-round
-  * delta blooms merge into it bit-for-bit); past it, the bucket-sharded
+  * Within the broadcast budget it is one bloom sized by observed load: 4×
+  * the seen count it was built at (floor 1,024 keys), per-round delta
+  * blooms merge into it bit-for-bit, and it is rebuilt at 4× the seen
+  * count once that passes its capacity (a fixed 2^20-key floor made
+  * every small crawl carry a 2.4 MB bitset, re-copied each round into
+  * bytes, a broadcast and executor cache entries). Past the budget, the bucket-sharded
   * file family ([[PartitionedBloom]]), whose epoch dirs live under
   * `familyBase`, keyed by the round that wrote them. The family merges
   * once per compaction window (a per-round merge touches every bucket
@@ -40,7 +45,11 @@ private[frontier] final class SeenPrefilterState(useBloom: Boolean,
       val t = new Thread(r, "graft-bloom-merge"); t.setDaemon(true); t
     }))
   private val minSeen = math.max(bloomMinSeen, 1L)
+  // design capacity: decides single bloom vs family against the budget,
+  // sizes the family, caps the single bloom; re-sized at compaction
   private var capacity = math.max(4L * minSeen, 1L << 20)
+  // the single bloom's own capacity (its delta blooms share it)
+  private var bloomCap = 0L
   private var bloomFut: Future[Option[BloomFilter]] = Future.successful(None)
   private var famFut: Future[Option[PartitionedBloom.BloomFamily]] =
     Future.successful(None)
@@ -51,7 +60,7 @@ private[frontier] final class SeenPrefilterState(useBloom: Boolean,
   private var recentCap = 0L
   private var recentFut: Future[Option[BloomFilter]] = Future.successful(None)
 
-  if (useBloom && seenCount0 >= minSeen) rebuild(seen0, epoch0)
+  if (useBloom && seenCount0 >= minSeen) rebuild(seen0, epoch0, seenCount0)
 
   private def bloomOf(seen: DataFrame, cap: Long): BloomFilter =
     UrlSeen.deserialize(UrlSeen.buildBloom(seen,
@@ -66,18 +75,21 @@ private[frontier] final class SeenPrefilterState(useBloom: Boolean,
     bos.toByteArray
   }
 
-  /** Full build from the whole seen table at the current capacity:
-    * the single bloom within the broadcast budget — past it the re-sized
-    * bitset is undeliverable and an under-sized bloom's FP rate → 1 — else
-    * the bucket family at capacity ∕ buckets per bucket.
+  /** Full build from the whole seen table (`seenCount` keys): the single
+    * bloom at 4× the seen count (at most the design capacity) while the
+    * design capacity is within the broadcast budget — past it the
+    * re-sized bitset is undeliverable and an under-sized bloom's FP rate
+    * → 1 — else the bucket family at capacity ∕ buckets per bucket.
     */
-  private def rebuild(seen: DataFrame, epoch: Int): Unit = {
-    val cap = capacity
-    if (UrlSeen.bloomWithinBudget(cap, budgetBytes = budgetBytes)) {
+  private def rebuild(seen: DataFrame, epoch: Int, seenCount: Long): Unit = {
+    if (UrlSeen.bloomWithinBudget(capacity, budgetBytes = budgetBytes)) {
+      bloomCap = math.min(math.max(4L * seenCount, 1024L), capacity)
+      val cap = bloomCap
       bloomFut = Future(Some(bloomOf(seen, cap)))(ec)
       famFut = Future.successful(None)
     } else {
       bloomFut = Future.successful(None)
+      val cap = capacity
       famFut =
         if (buckets <= 0) Future.successful(None)
         else Future({
@@ -127,7 +139,8 @@ private[frontier] final class SeenPrefilterState(useBloom: Boolean,
     * seen table including the delta; `compacted` marks a compaction
     * round. In order of preference: a compaction re-size (capacity ≥ 4×
     * seen keeps the FP rate at design level), the family's batched merge
-    * on the compaction cadence, the delta merge, a late first build.
+    * on the compaction cadence, the single bloom's re-size once the seen
+    * count passes its capacity, the delta merge, a late first build.
     */
   def absorb(round: Int, delta: DataFrame, deltaCount: Long, seenCount: Long,
       seenAll: DataFrame, compacted: Boolean): Unit = {
@@ -137,13 +150,13 @@ private[frontier] final class SeenPrefilterState(useBloom: Boolean,
         seenCount > capacity / 4) {
       capacity = 4L * seenCount
       resetWindow(deltaCount)
-      rebuild(seenAll, round)
+      rebuild(seenAll, round, seenCount)
     } else if (compacted && useBloom && prevFam.isDefined) {
       // all pending delta keys (this round's included) go into the family
       // under ONE new epoch: each touched bucket is read+written once per
       // window, keeping maintenance I/O at O(family) per window
       val fam = prevFam.get
-      val pendingKeys = seenKeys((pendingParts.toSeq :+ delta).reduce(_ unionByName _))
+      val pendingKeys = seenKeys(unionByName(pendingParts.toSeq :+ delta))
       resetWindow(deltaCount)
       famFut = Future({
         val merged = PartitionedBloom.merge(pendingKeys, fam, round)
@@ -151,8 +164,10 @@ private[frontier] final class SeenPrefilterState(useBloom: Boolean,
         Some(merged)
       })(ec)
     } else if (useBloom && deltaCount > 0) (prevBloom, prevFam) match {
+      case (Some(_), _) if seenCount > bloomCap && bloomCap < capacity =>
+        rebuild(seenAll, round, seenCount)
       case (Some(b), _) =>
-        val cap = capacity
+        val cap = bloomCap
         bloomFut = Future({ b.mergeInPlace(bloomOf(delta, cap)); Some(b) })(ec)
       case (None, Some(_)) =>
         // mid-window: the delta joins the pending set and the recent bloom
@@ -170,7 +185,7 @@ private[frontier] final class SeenPrefilterState(useBloom: Boolean,
         })(ec)
       case (None, None) if seenCount >= minSeen =>
         resetWindow(deltaCount)
-        rebuild(seenAll, round)
+        rebuild(seenAll, round, seenCount)
       case _ => ()
     }
   }

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.{Statistics, Union}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -49,4 +49,21 @@ object shim {
       }
     case _ => df
   }
+
+  /** One by-name union of `frames` (at least one), columns aligned by
+    * name to the first frame's order: what `frames.reduce(_ unionByName _)`
+    * builds, in ONE analyzer pass. Each pairwise `unionByName` eagerly
+    * re-analyzes the growing union, so an n-way chain analyzes the first
+    * frames n−1 times. The children stay as they are (no eager
+    * CombineUnions: it would collapse a child's projections into a
+    * persisted frame's plan and miss its cache entry).
+    */
+  def unionByName(frames: Seq[DataFrame]): DataFrame =
+    if (frames.size == 1) frames.head
+    else {
+      val session = frames.head.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val plans = frames.map(_.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan)
+      org.apache.spark.sql.classic.Dataset.ofRows(session,
+        Union(plans, byName = true, allowMissingCol = false))
+    }
 }

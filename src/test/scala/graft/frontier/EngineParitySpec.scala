@@ -513,9 +513,22 @@ class EngineParitySpec extends AnyFunSuite {
     val c = cfg(spec)
     val oracle = RefCrawlOracle.crawl(WorldGen.localWorld(spec), c)
     val dir = Files.createTempDirectory("crawl-resume").toString
+    // every crawl releases what it caches, also state it never compacts
+    // (the first crawl stops before any compaction): the session's
+    // CacheManager holds no more entries after both crawls than before
+    def cacheEntries: Int = {
+      val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager
+      val f = cm.getClass.getDeclaredField("cachedData")
+      f.setAccessible(true)
+      f.get(cm).asInstanceOf[Seq[_]].size
+    }
+    val cachedBefore = cacheEntries
     // run only 2 rounds, then resume to completion in a fresh driver call
     CrawlDriver.crawl(spark, world(spec), c.copy(maxRounds = 2), dir)
     val resumed = CrawlDriver.crawl(spark, world(spec), c, dir)
+    assert(cacheEntries <= cachedBefore,
+      s"crawls left ${cacheEntries - cachedBefore} CacheManager entries behind")
     assertParity(oracle, resumed)
   }
 
