@@ -24,11 +24,13 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * Per-round critical path is ONE forcing job (collect the lineage
   * aggregation, which materializes the round's checkpoint/caches and
   * yields every counter the driver needs) plus one small probe job that
-  * pins the next round's state. Every round, the seed bootstrap
-  * included, hands its durable delta write + manifest commit to one
-  * write pipeline: an ordered background thread whose writes are
-  * chained, so a failed write fails every later commit and the manifest
-  * sequence never has holes. One rule, the crawl's [[Placement]],
+  * pins the next round's state. A fresh crawl is seeded by ONE
+  * bootstrap, a Dataset pipeline over whichever seed input the caller
+  * gives (config entry points or a distributed `seedSource`). Every
+  * round, the bootstrap included, hands its durable delta write +
+  * manifest commit to one write pipeline: an ordered background thread
+  * whose writes are chained, so a failed write fails every later commit
+  * and the manifest sequence never has holes. One rule, the crawl's [[Placement]],
   * decides the rest: locally the write OVERLAPS the next round's plan
   * construction and forcing jobs (holding two rounds' caches instead of
   * one) and next-round state re-points at lazily local-checkpointed
@@ -132,10 +134,9 @@ object CrawlDriver {
         val t = new Thread(r, "graft-delta-write"); t.setDaemon(true); t
       }))
     private var pending: Future[Unit] = Future.successful(())
-    // caches and per-round host tables released once the pending write,
-    // which reads them, is done
-    private var heldCaches: Seq[DataFrame] = Nil
-    private var heldTables: Seq[HostTable] = Nil
+    // frees what the pending write reads (caches, per-round host tables
+    // and prefilter broadcasts) once it is done
+    private var held: () => Unit = () => ()
 
     def seenSel(df: DataFrame): DataFrame =
       df.select(col("canon").as("uri"), col("method"), col("seq"))
@@ -190,28 +191,24 @@ object CrawlDriver {
     }
 
     /** Ends a round: awaits the PREVIOUS write (its failure surfaces here,
-      * one round late at most), drops the caches and host tables it
-      * read, and holds `cached`/`tables` until `w`, the write that reads
-      * them, is done.
+      * one round late at most), frees what it read, and holds `release`
+      * until `w`, the write that reads what it frees, is done.
       */
-    def advance(w: Future[Unit], cached: Seq[DataFrame],
-        tables: Seq[HostTable] = Nil): Unit = {
+    def advance(w: Future[Unit], release: () => Unit): Unit = {
       Await.result(pending, Duration.Inf)
       free()
-      heldCaches = cached
-      heldTables = tables
+      held = release
       pending = w
     }
 
     private def free(): Unit = {
-      heldCaches.foreach(_.unpersist(blocking = false))
-      heldTables.foreach(_.destroy())
-      heldCaches = Nil
-      heldTables = Nil
+      val f = held
+      held = () => ()
+      f()
     }
 
-    /** Makes every dispatched write durable and drops the caches it read. */
-    def drain(): Unit = advance(Future.successful(()), Nil)
+    /** Makes every dispatched write durable and frees what it read. */
+    def drain(): Unit = advance(Future.successful(()), () => ())
 
     /** Stops the write thread once the in-flight write has ended (a
       * failed one has already failed the crawl) and frees what it held.
@@ -223,48 +220,54 @@ object CrawlDriver {
     }
   }
 
-  /** Distributed seed bootstrap for wide frontiers (the 10^10-URL
-    * shape): same semantics as the serial path — every seed consumes a
-    * seq in input order, first occurrence of a canon wins, queue
-    * positions are dense over accepted seeds, urlLimit caps the
-    * accepted count — but computed as Dataset transformations so a
-    * billion-URL seed list never loops on the driver. The round −1
-    * write goes through the write pipeline like any round's (locally it
-    * overlaps world prep and round 0); returns the counters and the
+  /** Seed bootstrap = round −1: replicates push(createTransaction(seed))
+    * for every entry point in order (core.py:55-61) as Dataset
+    * transformations, so a billion-URL seed list never loops on the
+    * driver. Every seed consumes a seq in input order, the first
+    * occurrence of a (canon, method) key wins, queue positions are dense
+    * over accepted seeds and urlLimit caps the accepted count. Entry
+    * points with request data (P15/G6) carry it urlencoded onto the
+    * fetch key and, with `recordParams`, into the param table. The round
+    * −1 write goes through the write pipeline like any round's (locally
+    * it overlaps world prep and round 0); returns the counters and the
     * re-pointed state.
     */
-  private def bootstrapDistributed(spark: SparkSession, cfg: CrawlConfig,
+  private def bootstrap(spark: SparkSession, cfg: CrawlConfig,
       store: SnapshotStore, pipe: WritePipeline, seedSource: Option[DataFrame],
       seedCountHint: Option[Long]): (store.Counters, RoundState) = {
     import graft.plans.Ranks
     import graft.url.UrlExpressions._
     import spark.implicits._
     val parts = pipe.parts
-    // a billion-URL seed list must never exist as a driver Seq: callers
-    // at scale pass `seedSource` (columns i: Long unique ascending,
-    // raw: String), generated/read distributively. A caller-provided
-    // EXACT count (callers know their generated range) skips the max(i)
-    // scan job — one less serial step on the bootstrap critical path.
-    // Exactness matters: nSeeds becomes nextSeq (every seed consumes a
-    // seq, dups included, serial-path semantics), so an over-estimate
-    // would shift all subsequent seq assignment.
-    val (raw0, nSeeds) = seedSource match {
-      case Some(df) => (df.select(col("i"), col("raw")),
+    // seed table (i: Long unique ascending, raw, method, dataQ, data).
+    // A billion-URL seed list must never exist as a driver Seq: callers
+    // at scale pass `seedSource` (columns i, raw), generated/read
+    // distributively; config entry points are enumerated, so small. A
+    // caller-provided EXACT count skips the max(i) scan job. Exactness
+    // matters: the count becomes nextSeq (every seed consumes a seq, dups
+    // included), so an over-estimate would shift all later seqs.
+    val (seeds, nSeeds) = seedSource match {
+      case Some(df) => (df.select(col("i"), col("raw"), lit("GET").as("method"),
+          lit(null).cast("string").as("dataQ"),
+          lit(null).cast("array<struct<_1:string,_2:string>>").as("data")),
         seedCountHint.getOrElse(df.agg(max(col("i"))).head().getLong(0) + 1L))
-      case None => (spark.createDataset(
-          cfg.seeds.zipWithIndex.map { case (u, i) => (i.toLong, u) })
-        .toDF("i", "raw"), cfg.seeds.size.toLong)
+      case None =>
+        val es = cfg.effectiveSeeds
+        (es.zipWithIndex.map { case (e, i) => (i.toLong, e.url, e.method,
+            if (e.data.nonEmpty) UrlFuncs.urlencode(e.data) else null, e.data) }
+          .toDF("i", "raw", "method", "dataQ", "data"), es.size.toLong)
     }
-    val raw = raw0.repartition(parts, col("i"))
-      .withColumn("decoded", url_unquote2(col("raw")))
+    // first occurrence per (canon, method) via partial-aggregating
+    // groupBy (map-side combine, no per-partition sort); i is unique so
+    // min(struct) is the deterministic winner. Cached: the bounded rank's
+    // offsets broadcast would otherwise re-execute the seed scan+groupBy
+    val first = seeds.withColumn("decoded", url_unquote2(col("raw")))
       .withColumn("canon", url_defrag(col("decoded")))
-    // first occurrence per canon via partial-aggregating groupBy (map-
-    // side combine, no per-partition sort); i is unique so min(struct)
-    // is the deterministic winner. Cached: the bounded rank's offsets
-    // broadcast would otherwise re-execute the whole seed scan+groupBy
-    val first = raw.groupBy(col("canon"))
-      .agg(min(struct(col("i"), col("decoded"))).as("f"))
-      .select(col("f.i").as("i"), col("canon"), col("f.decoded").as("decoded"))
+      .groupBy(col("canon"), col("method"))
+      .agg(min(struct(col("i"), col("decoded"), col("dataQ"), col("data"))).as("f"))
+      .select(col("f.i").as("i"), col("canon"), col("method"),
+        col("f.decoded").as("decoded"), col("f.dataQ").as("dataQ"),
+        col("f.data").as("data"))
       .persist(MEMORY_AND_DISK)
     // bounded rank on the known index range — no sampling pass (a
     // repartitionByRange would re-scan the seed set to sample bounds)
@@ -276,15 +279,20 @@ object CrawlDriver {
     }
     val frontier = limited.select(col("i").as("seq"), col("pos"),
       col("canon").as("uri"), col("canon").as("origUri"), lit(0).as("depth"),
-      lit(-1L).as("srcSeq"), lit("GET").as("method"),
-      lit(null).cast("string").as("expected"), lit(null).cast("string").as("referer"),
-      lit(null).cast("string").as("dataQ"))
-    val accepted = limited.select(col("i").as("seq"), lit("GET").as("method"),
+      lit(-1L).as("srcSeq"), col("method"), lit(null).cast("string").as("expected"),
+      lit(null).cast("string").as("referer"), col("dataQ"))
+    val accepted = limited.select(col("i").as("seq"), col("method"),
       col("canon"), col("decoded"), lit(0).as("depth"),
       lit(null).cast("string").as("expected"))
+    // G6: the data of accepted entry points (database.py:185-189)
+    val params =
+      if (!cfg.recordParams) Nil
+      else Seq(asDelta("params", -1, limited
+        .select(col("i").as("seq"), explode(col("data")).as("p"))
+        .select(col("seq"), col("p._1").as("pkey"), col("p._2").as("pvalue"))))
     val delta = unionByName(Seq(asDelta("frontier", -1, frontier),
         asDelta("accepted", -1, accepted),
-        asDelta("host_state", -1, spark.emptyDataset[HostState].toDF())))
+        asDelta("host_state", -1, spark.emptyDataset[HostState].toDF())) ++ params)
       .coalesce(parts)
     // the accepted-seed count fills the first/limited caches that the
     // write and round 0 both read; they are released once both are done
@@ -297,61 +305,12 @@ object CrawlDriver {
     pipe.advance(pipe.dispatch {
       store.writeDelta(-1, delta)
       store.commit(-1, cnt, Seq(("seeds", 0, n)))
-    }, Seq(first, limC))
+    }, () => Seq(first, limC).foreach(_.unpersist(blocking = false)))
     // bootstrap writes no dup/maps/host rows by construction
     (cnt, pipe.repoint(-1, RoundState(
       pipe.seenSel(accepted).persist(MEMORY_AND_DISK),
       pipe.emptyDup.persist(MEMORY_AND_DISK), pipe.emptyMaps.persist(MEMORY_AND_DISK),
       pipe.emptyHost, pipe.frontierSel(frontier))))
-  }
-
-  /** Seed bootstrap = round "-1": replicates push(createTransaction(seed))
-    * for each configured entry point in order (core.py:55-61) — tiny,
-    * driver-side, exactly the oracle's seed path, including method/data
-    * entry points (P15/G6: data is urlencoded onto the fetch key and
-    * recorded into the param table at push-accept). Seed lists past
-    * `distBootstrapMin` take [[bootstrapDistributed]].
-    */
-  private def bootstrap(spark: SparkSession, cfg: CrawlConfig, store: SnapshotStore): Unit = {
-    import spark.implicits._
-    var nextSeq = 0L
-    var nextPos = 0L
-    val seen = scala.collection.mutable.LinkedHashMap.empty[(String, String), Long]
-    // (seq, pos, canon, decoded, method, dataQ)
-    val items = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String, String, String, String)]
-    val params = scala.collection.mutable.ArrayBuffer.empty[ParamRow]
-    for (e <- cfg.effectiveSeeds) {
-      val decoded = UrlFuncs.unquote2(e.url)
-      val seq = nextSeq; nextSeq += 1
-      val canon = UrlFuncs.defrag(decoded)
-      val key = (canon, e.method)
-      if (!seen.contains(key) && !cfg.urlLimit.exists(seen.size >= _)) {
-        seen(key) = seq
-        val dq = if (e.data.nonEmpty) UrlFuncs.urlencode(e.data) else null
-        items += ((seq, nextPos, canon, decoded, e.method, dq))
-        if (cfg.recordParams)
-          for ((k, v) <- e.data) params += ParamRow(seq, k, v)
-        nextPos += 1
-      }
-    }
-    val frontier = items.toSeq.map { case (seq, pos, canon, _, method, dq) =>
-        (seq, pos, canon, canon, 0, -1L, method, null: String, null: String, dq)
-      }
-      .toDF("seq", "pos", "uri", "origUri", "depth", "srcSeq", "method", "expected",
-        "referer", "dataQ")
-    val accepted = items.toSeq.map { case (seq, _, canon, decoded, method, _) =>
-        (seq, method, canon, decoded, 0, null: String)
-      }.toDF("seq", "method", "canon", "decoded", "depth", "expected")
-    val paramsDf = params.toSeq.map(p => (p.seq, p.key, p.value))
-      .toDF("seq", "pkey", "pvalue")
-    val hostState = spark.emptyDataset[HostState].toDF()
-    store.writeDelta(-1, unionByName(Seq(asDelta("frontier", -1, frontier),
-        asDelta("accepted", -1, accepted),
-        asDelta("params", -1, paramsDf),
-        asDelta("host_state", -1, hostState)))
-      .coalesce(1))
-    store.commit(-1, store.Counters(-1, nextSeq, nextPos, 0L, seen.size.toLong,
-      items.size.toLong), Seq(("seeds", 0, items.size.toLong)))
   }
 
   /** Run (or resume) a crawl; returns a handle over the snapshot dirs.
@@ -367,8 +326,7 @@ object CrawlDriver {
     */
   def crawl(spark: SparkSession, world0: CrawlRound.WorldDF, cfg: CrawlConfig,
       checkpointDir: String, useBloom: Boolean = true,
-      bloomMinSeen: Long = 100000L, distBootstrapMin: Int = 50000,
-      compactEvery: Int = 8,
+      bloomMinSeen: Long = 100000L, compactEvery: Int = 8,
       /** single-bloom broadcast budget: past it the prefilter switches
         * to the bucket-sharded file-backed family (PartitionedBloom) */
       bloomBudgetBytes: Long = 256L << 20,
@@ -376,14 +334,15 @@ object CrawlDriver {
         * ∕ buckets stays executor-cache friendly at target scale) */
       bloomBuckets: Int = 8192,
       /** distributed seed table (i: Long unique ascending, raw: String);
-        * replaces cfg.seeds for wide frontiers (same push semantics) */
+        * replaces cfg.seeds for wide frontiers (same push semantics).
+        * Exclusive with cfg.seedEntries. */
       seedSource: Option[DataFrame] = None,
       /** EXACT seed count (= max(i)+1 of `seedSource`) when the caller
         * knows it — skips the bootstrap's max(i) scan job. Must be
         * exact, not an estimate: it becomes the post-bootstrap nextSeq. */
       seedCountHint: Option[Long] = None): CrawlRun =
     crawl(Placement.of(spark), spark, world0, cfg, checkpointDir, useBloom,
-      bloomMinSeen, distBootstrapMin, compactEvery, bloomBudgetBytes,
+      bloomMinSeen, compactEvery, bloomBudgetBytes,
       bloomBuckets, seedSource, seedCountHint)
 
   /** [[crawl]] under an explicit [[Placement]] (tests run the cluster
@@ -391,9 +350,11 @@ object CrawlDriver {
     */
   private[frontier] def crawl(placement: Placement, spark: SparkSession,
       world0: CrawlRound.WorldDF, cfg: CrawlConfig, checkpointDir: String,
-      useBloom: Boolean, bloomMinSeen: Long, distBootstrapMin: Int,
+      useBloom: Boolean, bloomMinSeen: Long,
       compactEvery: Int, bloomBudgetBytes: Long, bloomBuckets: Int,
       seedSource: Option[DataFrame], seedCountHint: Option[Long]): CrawlRun = {
+    require(seedSource.isEmpty || cfg.seedEntries.isEmpty,
+      "seedSource and cfg.seedEntries are exclusive seed inputs")
     val store = new SnapshotStore(checkpointDir, spark)
     // the cluster placement's reliable checkpoints (f5c, compaction) go
     // into the snapshot store's filesystem
@@ -411,16 +372,9 @@ object CrawlDriver {
     var world: CrawlRound.PreparedWorld = null
     var inFlight: Option[CrawlRound.RoundOut] = None
     try {
-      // entry points with request data stay on the serial bootstrap
-      // (they are config-enumerated, never billions)
       val (c0, state0) = store.latestCommitted() match {
         case Some(k) => (store.readCounters(k), pipe.stored(k, cumulative = true))
-        case None if !cfg.seedEntries.exists(_.data.nonEmpty) &&
-            (seedSource.isDefined || cfg.seeds.size >= distBootstrapMin) =>
-          bootstrapDistributed(spark, cfg, store, pipe, seedSource, seedCountHint)
-        case None =>
-          bootstrap(spark, cfg, store)
-          (store.readCounters(-1), pipe.stored(-1, cumulative = true))
+        case None => bootstrap(spark, cfg, store, pipe, seedSource, seedCountHint)
       }
       var c = c0
       val parts = pipe.parts
@@ -600,11 +554,11 @@ object CrawlDriver {
           prefilter.absorb(round, state.seen, acceptedCount, c.seenCount,
             seenCum, doCompact)
 
-          // ---- release: this round's caches and host tables (read by
-          // the in-flight write) wait one more round. Checkpoint leaves
+          // ---- release: this round's caches, host tables and prefilter
+          // broadcasts (read by the in-flight write) wait one more round. Checkpoint leaves
           // are not in the CacheManager; the ContextCleaner frees their
           // blocks once the loop stops referencing them.
-          pipe.advance(thisWrite, out.cached, out.hostTables)
+          pipe.advance(thisWrite, out.release)
           inFlight = None
         }
       } finally prefilter.close()
@@ -614,10 +568,7 @@ object CrawlDriver {
       CrawlRun(store, c.round, spark)
     } finally {
       pipe.close()
-      inFlight.foreach { o =>
-        o.cached.foreach(_.unpersist(blocking = false))
-        o.hostTables.foreach(_.destroy())
-      }
+      inFlight.foreach(_.release())
       // persisted parts (recovered, bootstrapped or re-read state) and
       // the cluster's persisted world tables; unpersisting a leaf is a
       // no-op

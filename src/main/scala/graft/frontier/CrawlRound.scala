@@ -225,18 +225,27 @@ object CrawlRound {
       cookies: DataFrame, // seq, cname, cvalue, csecure, chttpOnly, cpath (G5)
       lineage: DataFrame, // metric, partition, count
       cached: Seq[DataFrame], // persisted intermediates; unpersist after commit
-      hostTables: Seq[HostTable]) // per-round lookups; destroy with `cached`
+      hostTables: Seq[HostTable], // per-round lookups; destroy with `cached`
+      /** the seen prefilter the dedup stage probed; its broadcasts are
+        * destroyed with `cached` */
+      prefilter: Option[UrlSeen.SeenPrefilter]) {
+    /** Frees what the round owns, once no plan that reads it runs again.
+      * Holds only those, not the round: a held RoundOut would keep its
+      * plans (the collected lineage's executed plan among them) live.
+      */
+    def release: () => Unit = {
+      val (c, t, p) = (cached, hostTables, prefilter)
+      () => {
+        c.foreach(_.unpersist(blocking = false))
+        t.foreach(_.destroy())
+        p.foreach(_.destroy())
+      }
+    }
+  }
 
   private val LinkKinds = Seq("link", "css-link", "img", "iframe", "frame")
 
   def run(spark: SparkSession, world: PreparedWorld, cfg: CrawlConfig, in: RoundIn): RoundOut = {
-    val __trace = sys.env.contains("SPARK_GRAFT_TRACE2")
-    var __t = System.nanoTime()
-    def __mark(s: String): Unit = if (__trace) {
-      val now = System.nanoTime()
-      println(f"[run ${in.round}] $s=${(now - __t) / 1e9}%.2fs")
-      __t = now
-    }
     // round-varying plan parameters ride the codegen references array
     // (graft.plans.Dyn) so every BSP round reuses the same compiled
     // classes instead of paying a fresh janino compile
@@ -296,8 +305,6 @@ object CrawlRound {
         "uriN" ->
           (if (cfg.normalizeUris) url_defrag(url_normalize(col("uri"))) else col("uri"))))
       .drop("rrules", "pathq")
-    __mark("f1")
-    val f1n = f1
 
     // ---- fetch = frontier ⋈ pre-resolved fetch map (J6, one join) ----
     // P15: GET/HEAD request data rides the fetch URL (net.py:200-207);
@@ -309,7 +316,7 @@ object CrawlRound {
       else when((col("method") === "GET" || col("method") === "HEAD") &&
           col("dataQ").isNotNull,
         concat(col("uriN"), lit("?"), col("dataQ"))).otherwise(col("uriN"))
-    val f2 = f1n.withColumn("fetchKey", fetchKey)
+    val f2 = f1.withColumn("fetchKey", fetchKey)
       .join(world.fetchMap, col("fetchKey") === col("url"), "left")
       .withColumns(ListMap(
         "ct" -> split(col("finCtRaw"), ";").getItem(0),
@@ -368,7 +375,6 @@ object CrawlRound {
         Seq(state))
     }
 
-    __mark("f2f4")
     // ---- body (J6b: slim per-doc feature join; the heavy spans were
     // parsed once in prepare and never enter the round) ----------------
     // (three analyzer levels: {uriHdr, reached200, hasSpans} →
@@ -437,9 +443,7 @@ object CrawlRound {
     // separate up-front job — one fewer serial job barrier per round
     // (block-manager per-partition locks keep it compute-once). A
     // cluster takes the eager reliable checkpoint ([[Placement.cut]]).
-    __mark("f5")
     val f5c = in.placement.cut(f5, eager = false)
-    __mark("f5c")
     val processed = f5c.filter(!col("defer"))
     val deferred = f5c.filter(col("defer"))
       .select("pos", "seq", "uri", "origUri", "depth", "srcSeq", "method",
@@ -461,7 +465,6 @@ object CrawlRound {
       statusCol.as("verificationStatus"),
       col("depth"), col("expected"), dynInt(in.round).as("round"))
 
-    __mark("tx")
     // ---- defects (deterministic order key: (popPos=pos, phase)) ------
     def defectDf(cond: Column, phase: Int, seqCol: Column, name: String,
         evidence: Column, sev: Double): DataFrame =
@@ -483,7 +486,6 @@ object CrawlRound {
         col("finMime") =!= col("ct"), 3, col("seq"), "type-mishmash",
         concat(lit("Declared "), col("ct"), lit(",detected "), col("finMime")), 0.3))
 
-    __mark("defects")
     // ---- checker plugins over OK pages (phases 4..11, Checks) --------
     // dupdetect (D4): vs all earlier OK pages (cross-round state +
     // earlier pops this round) with equal (size, body) and different uri
@@ -538,7 +540,6 @@ object CrawlRound {
     val allDefects = unionByName(
       defects ++ (dupDefects +: Checks.pageDefects(okHtmlChk) +: smDefects))
 
-    __mark("checkers")
     // ---- link explode (G1/G2/G3) with ARITHMETIC seq assignment ------
     // idno parity: every scheme-passing link consumes a seq, dups
     // included (transaction.py:102-115); order = (parent pop, doc order;
@@ -596,7 +597,6 @@ object CrawlRound {
     val knownMapsDelta = won.map(_.select(col("loc").as("uri")))
       .getOrElse(spark.emptyDataFrame.select(lit("").as("uri")).limit(0))
 
-    __mark("won")
     // per-parent kid counts (regular + virtual) -> exclusive prefix sum
     val cntReg = processed.select(col("pos"),
         (coalesce(size(col("kidArr")), lit(0)) +
@@ -629,7 +629,6 @@ object CrawlRound {
       .join(based.select(col("pos").as("parentPos"), col("base").as("sbase"),
         col("vcnt")), Seq("parentPos"))
 
-    __mark("counts")
     val kids1 = parents
       .select(col("parentSeq"), col("parentPos"), col("depth"), col("base"),
         col("sbase"), col("vcnt"),
@@ -650,7 +649,6 @@ object CrawlRound {
       .withColumn("canon", url_defrag(col("decoded")))
       .select(kidCols.map(col): _*)
 
-    __mark("kids1")
     // ---- sitemap_scanner loc pushes (G2): raw locs, NO urljoin/quote
     // (sitemap_scanner.py:118-124 pushes the <loc> string directly).
     // When BOTH links_finder and sitemap_scanner fire on one page
@@ -678,7 +676,6 @@ object CrawlRound {
         "canon" -> url_defrag(col("decoded"))))
       .select(kidCols.map(col): _*)
 
-    __mark("smloc")
     // virtual rows: robots tx at vidx 0, loc links at vidx 1+j hanging
     // off the robots tx's seq (push_link(new_map, robots_transaction),
     // robots.py:80) — both DIRECTLY computable from sbase, no post-rank
@@ -713,11 +710,9 @@ object CrawlRound {
       robotsRows.unionByName(mapRows)
     }
 
-    __mark("smvirt")
     val kids2 = unionByName(Seq(kids1, smLocKids) ++ smVirtualKids.toSeq)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    __mark("kids2")
     // ---- dedup: intra-round first-wins + URL-seen bands (D1) ---------
     // partial-aggregating groupBy (min by unique seq) instead of a
     // window: map-side combine shrinks the shuffle and skips the
@@ -732,11 +727,11 @@ object CrawlRound {
         col("k.cdepth").as("cdepth"), col("k.referer").as("referer"),
         col("k.smHost").as("smHost"))
       .withColumn("method", lit("GET"))
+    val prefilter = in.seenBloom()
     val newItems = UrlSeen.dedupeAgainstSeen(
       firstKids, in.seen.map(_.select(col("uri").as("canon"), col("method"))),
-      "canon", "method", in.seenBloom())
+      "canon", "method", prefilter)
 
-    __mark("dedup")
     // urlLimit (F10): global dense rank by seq vs the remaining budget;
     // over-limit items vanish entirely (SeenLimit: no rows logged)
     val (accepted, droppedCanons) = cfg.urlLimit match {
@@ -750,7 +745,6 @@ object CrawlRound {
 
     val acceptedC = accepted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    __mark("limit")
     // link rows: all created links, duplicates included, except SeenLimit
     // drops — an over-limit canon never enters the seen set, so EVERY
     // same-round occurrence hits SeenLimit and logs nothing
@@ -767,7 +761,6 @@ object CrawlRound {
       col("decoded"), col("cdepth").as("depth"), col("cexpected").as("expected"),
       dynInt(in.round).as("round"))
 
-    __mark("links")
     // ---- next frontier: deferred ∪ accepted, serial-FIFO arrival order
     val defPart = deferred.select(col("pos").as("creatorPos"), lit(0L).as("ci"),
       col("seq"), col("uri"), col("origUri"), col("depth"), col("srcSeq"),
@@ -784,7 +777,6 @@ object CrawlRound {
         "expected", "referer", "dataQ")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    __mark("frontier")
     // ---- host politeness state (closed form of the serial recurrence)
     val succ = processed.filter(col("wouldSucceed") && col("gate") === "pass")
       .groupBy("host").agg(count(lit(1)).as("J"),
@@ -799,7 +791,6 @@ object CrawlRound {
     val hostStateOut = in.hostState.join(succ, Seq("host"), "full")
       .select(col("host"), coalesce(col("newVt"), col("lastVisitS")).as("lastVisitS"))
 
-    __mark("host")
     // ---- G5 cookie recording (net.py:126, 209-218): response cookies
     // of every fetch that reached a 200 — recorded BEFORE accepted-type
     // filtering, so DONE-IGNORED cttype/toolong/mistyped rows keep theirs
@@ -825,7 +816,6 @@ object CrawlRound {
           h => h.getField("hvalue").isNotNull)).as("h"))
         .select(col("seq"), col("h.hname").as("hname"), col("h.hvalue").as("hvalue"))
 
-    __mark("cookhdr")
     // ---- per-partition lineage (A4 / north rule) ----------------------
     def lin(df: DataFrame, metric: String): DataFrame =
       df.select(lit(metric).as("metric"), spark_partition_id().as("partition"),
@@ -844,11 +834,10 @@ object CrawlRound {
       .agg(sum(col("w")).as("count"))
       .select("metric", "partition", "count")
 
-    __mark("lineage")
     RoundOut(frontierOut, acceptedOut, txProcessed, links,
       allDefects, hostStateOut,
       dupStateDelta, knownMapsDelta, headersOut, cookiesOut, lineage,
       cached = Seq(f5c, kids2, acceptedC, frontierOut),
-      hostTables = roundTables)
+      hostTables = roundTables, prefilter = prefilter)
   }
 }

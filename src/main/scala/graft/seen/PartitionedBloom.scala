@@ -191,12 +191,12 @@ object PartitionedBloom {
   * ACCESS-ORDERED (true LRU): a hot bucket re-probed across tasks is
   * never evicted ahead of cold ones (the earlier FIFO queue also
   * leaked its just-loaded key on a victim==key collision, eroding the
-  * bound). `maxEntries` comes from `spark.graft.bloomCacheEntries`
-  * via [[BucketBloomContains]] so deployments size the per-executor
-  * budget from executor memory instead of a hard-coded 64.
+  * bound). The bound is [[MaxEntries]]; `get`'s `entries` resizes it
+  * (a test hook).
   */
 object BucketBloomCache {
-  @volatile private var maxEntries = 64
+  val MaxEntries = 64
+  @volatile private var maxEntries = MaxEntries
   private val cache =
     new java.util.LinkedHashMap[String, BloomFilter](64, 0.75f, true) {
       override def removeEldestEntry(
@@ -212,7 +212,7 @@ object BucketBloomCache {
   private[seen] def clear(): Unit = cache.synchronized(cache.clear())
 
   def get(base: String, epoch: Int, bucket: Int,
-      entries: Int = 64): BloomFilter = {
+      entries: Int = MaxEntries): BloomFilter = {
     if (entries != maxEntries && entries > 0) maxEntries = entries
     val key = s"$base|$epoch|$bucket"
     cache.synchronized {
@@ -242,8 +242,7 @@ object BucketBloomCache {
   * (definitely new). Mirrors [[BloomMightContain]]'s shape.
   */
 case class BucketBloomContains(child: Expression, base: String, buckets: Int,
-    epochs: Broadcast[Map[Int, Int]], cacheEntries: Int = 64)
-    extends UnaryExpression {
+    epochs: Broadcast[Map[Int, Int]]) extends UnaryExpression {
 
   override def dataType: DataType = BooleanType
 
@@ -253,7 +252,7 @@ case class BucketBloomContains(child: Expression, base: String, buckets: Int,
     epochs.value.get(b) match {
       case None => false
       case Some(e) =>
-        BucketBloomCache.get(base, e, b, cacheEntries).mightContainLong(h)
+        BucketBloomCache.get(base, e, b).mightContainLong(h)
     }
   }
 

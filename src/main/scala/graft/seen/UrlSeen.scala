@@ -1,5 +1,6 @@
 package graft.seen
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -89,10 +90,29 @@ object UrlSeen {
     * candidate key columns, produce the Boolean "maybe seen" column
     * (true → verify exactly; false → DEFINITELY new, bypass the
     * anti-join shuffle). Both variants guarantee no false negatives.
+    * Each `might` broadcasts what its column probes; the prefilter owns
+    * those broadcasts until [[destroy]].
     */
   sealed trait SeenPrefilter {
+    private val owned = scala.collection.mutable.ArrayBuffer.empty[Broadcast[_]]
+
     def might(uriCol: Column, methodCol: Column,
         spark: org.apache.spark.sql.SparkSession): Column
+
+    protected def broadcast[T: scala.reflect.ClassTag](
+        spark: org.apache.spark.sql.SparkSession, v: T): Broadcast[T] = {
+      val b = spark.sparkContext.broadcast(v)
+      owned.synchronized(owned += b)
+      b
+    }
+
+    /** Destroys every broadcast `might` made; call once no plan that
+      * probes them runs again.
+      */
+    def destroy(): Unit = owned.synchronized {
+      owned.foreach(_.destroy())
+      owned.clear()
+    }
   }
 
   /** One merged bloom broadcast as its bitset — the within-budget path
@@ -102,7 +122,7 @@ object UrlSeen {
     override def might(uriCol: Column, methodCol: Column,
         spark: org.apache.spark.sql.SparkSession): Column = {
       import org.apache.spark.sql.graft.shim.{toColumn, toExpression}
-      val bcast = spark.sparkContext.broadcast(bytes)
+      val bcast = broadcast(spark, bytes)
       toColumn(BloomMightContain(
         toExpression(seenKey(uriCol, methodCol)), bcast))
     }
@@ -117,12 +137,9 @@ object UrlSeen {
     override def might(uriCol: Column, methodCol: Column,
         spark: org.apache.spark.sql.SparkSession): Column = {
       import org.apache.spark.sql.graft.shim.{toColumn, toExpression}
-      val bcast = spark.sparkContext.broadcast(fam.epochs)
-      val cacheEntries = spark.conf
-        .get("spark.graft.bloomCacheEntries", "64").toInt
+      val bcast = broadcast(spark, fam.epochs)
       toColumn(BucketBloomContains(
-        toExpression(seenKey(uriCol, methodCol)), fam.base, fam.buckets, bcast,
-        cacheEntries))
+        toExpression(seenKey(uriCol, methodCol)), fam.base, fam.buckets, bcast))
     }
   }
 
@@ -136,6 +153,7 @@ object UrlSeen {
     override def might(uriCol: Column, methodCol: Column,
         spark: org.apache.spark.sql.SparkSession): Column =
       a.might(uriCol, methodCol, spark) || b.might(uriCol, methodCol, spark)
+    override def destroy(): Unit = { a.destroy(); b.destroy() }
   }
 
   /** candidates ∖ seen on `uriCol`/`methodCol` (exact), with the bloom

@@ -3,6 +3,7 @@ package graft.frontier
 import graft.model._
 import graft.oracle.RefCrawlOracle
 import graft.synth.{WorldGen, WorldSpec}
+import org.apache.spark.graft.blocks
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -415,8 +416,8 @@ class EngineParitySpec extends AnyFunSuite {
       w.hosts.toDF(), w.rules.toDF(), null)
     val dir = Files.createTempDirectory("crawl-cluster-placement").toString
     val run = CrawlDriver.crawl(Placement(local = false), s2, wdf, c, dir,
-      useBloom = true, bloomMinSeen = 0L, distBootstrapMin = 50000,
-      compactEvery = 8, bloomBudgetBytes = 256L << 20, bloomBuckets = 8192,
+      useBloom = true, bloomMinSeen = 0L, compactEvery = 8,
+      bloomBudgetBytes = 256L << 20, bloomBuckets = 8192,
       seedSource = None, seedCountHint = None)
     assertParity(oracle, run)
     // non-vacuity: the crawl took reliable checkpoints, which only the
@@ -433,7 +434,7 @@ class EngineParitySpec extends AnyFunSuite {
     assertParity(o, r)
   }
 
-  test("distributed bootstrap ≡ serial bootstrap semantics (dups, limit)") {
+  test("seed bootstrap: dups, fragments, urlLimit, seedSource ≡ seeds") {
     val spec = WorldSpec("two-host-bfs", nHosts = 2, nDocs = 30)
     // duplicated seeds + a fragment variant that canonicalizes into one
     val seeds = (0L until 20L).map(d => WorldGen.docUrl(spec, d % 8)) :+
@@ -441,7 +442,7 @@ class EngineParitySpec extends AnyFunSuite {
     val c = cfg(spec).copy(seeds = seeds, urlLimit = Some(18))
     val oracle = RefCrawlOracle.crawl(WorldGen.localWorld(spec), c)
     val dir = Files.createTempDirectory("crawl-distboot").toString
-    val run = CrawlDriver.crawl(spark, world(spec), c, dir, distBootstrapMin = 1)
+    val run = CrawlDriver.crawl(spark, world(spec), c, dir)
     assertParity(oracle, run)
     // the distributed seedSource path (i, raw) must be identical
     import spark.implicits._
@@ -451,6 +452,22 @@ class EngineParitySpec extends AnyFunSuite {
     val run2 = CrawlDriver.crawl(spark, world(spec), c.copy(seeds = Nil), dir2,
       seedSource = Some(src))
     assertParity(oracle, run2)
+    // entry points: the seen key is (canon, method), so the POST twin is
+    // a key of its own and the fragment variant a duplicate; urlLimit
+    // counts accepted keys, so the last data-bearing entry falls past it
+    // and records no params
+    val u0 = WorldGen.docUrl(spec, 0)
+    val entries = Seq(SeedEntry(u0), SeedEntry(u0, "POST"),
+      SeedEntry(WorldGen.docUrl(spec, 1), "GET", Seq("q" -> "a b")),
+      SeedEntry(u0 + "#frag"), SeedEntry(WorldGen.docUrl(spec, 2)),
+      SeedEntry(WorldGen.docUrl(spec, 3), "GET", Seq("k" -> "v")))
+    val c3 = cfg(spec).copy(seeds = Nil, seedEntries = entries, urlLimit = Some(4))
+    val oracle3 = RefCrawlOracle.crawl(WorldGen.localWorld(spec), c3)
+    val dir3 = Files.createTempDirectory("crawl-entryboot").toString
+    val run3 = CrawlDriver.crawl(spark, world(spec), c3, dir3)
+    assertParity(oracle3, run3)
+    assert(run3.params.collect().map(x => (x.getLong(0), x.getString(1), x.getString(2)))
+      .toSeq == Seq((2L, "q", "a b")))
   }
 
   test("parity: deep crawl (30+ rounds) with periodic state compaction") {
@@ -543,6 +560,7 @@ class EngineParitySpec extends AnyFunSuite {
     val c = cfg(spec)
     val oracle = RefCrawlOracle.crawl(WorldGen.localWorld(spec), c)
     val dir = Files.createTempDirectory("crawl-resume-bb").toString
+    val broadcastsBefore = blocks.broadcastValues(spark.sparkContext).keySet
     CrawlDriver.crawl(spark, world(spec), c.copy(maxRounds = 2), dir,
       bloomMinSeen = 0L, bloomBudgetBytes = 1L, bloomBuckets = 8)
     val resumed = CrawlDriver.crawl(spark, world(spec), c, dir,
@@ -553,9 +571,21 @@ class EngineParitySpec extends AnyFunSuite {
     // would finalize an abandoned executor and hide the leak.
     def graftThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
       .filter(t => t.isAlive && t.getName.startsWith("graft-")).map(_.getName).toSeq
+    // ... and destroy their broadcasts (the prefilters' bloom bitsets and
+    // family epoch maps, the host tables), which `destroy` removes
+    // asynchronously. Spark's own broadcasts (Java-serialized task
+    // binaries, hadoop confs) are the ContextCleaner's.
+    def crawlBroadcasts = blocks.broadcastValues(spark.sparkContext).collect {
+      case (id, _: Map[_, _]) if !broadcastsBefore(id) => id
+      case (id, b: Array[Byte]) if !broadcastsBefore(id) &&
+          !(b.length >= 2 && b(0) == 0xAC.toByte && b(1) == 0xED.toByte) => id
+    }
     val deadline = System.nanoTime() + 60L * 1000000000L
-    while (graftThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    while ((graftThreads.nonEmpty || crawlBroadcasts.nonEmpty) &&
+        System.nanoTime() < deadline) Thread.sleep(100)
     assert(graftThreads.isEmpty, s"background threads outlived their crawls: $graftThreads")
+    assert(crawlBroadcasts.isEmpty,
+      s"broadcasts outlived their crawls: ${crawlBroadcasts.toSeq.sorted}")
     assertParity(oracle, resumed)
   }
 }
