@@ -91,15 +91,6 @@ object Checks {
           g.uriRegexes.exists(r => r.r.pattern.matcher(uri).lookingAt())
     }
 
-  /** Canonical body of a document: its spans in offset order, fields
-    * joined with control separators (dupdet.py:82-89's file-bytes view
-    * in the span model).
-    */
-  def bodyString(spans: Seq[Span]): String =
-    spans.sortBy(_.offset).map(s =>
-      s"${s.kind}${Option(s.text).getOrElse("")}${Option(s.media_ref).getOrElse("")}")
-      .mkString("")
-
   /** SPAN-STRUCTURAL dup-detection key: the (kind, text, media_ref)
     * sequence in offset order. This is the body-equality relation the
     * engine's 128-bit span fold hashes (CrawlRound prepare `bh0`) — the
@@ -127,17 +118,6 @@ object Checks {
         col("seq").as("responseSeq"), col("d.typeName").as("typeName"),
         col("d.evidence").as("evidence"), col("d.severity").as("severity"),
         col("d.sub").as("sub"))
-
-  /** The per-page checker defect array (struct(phase,typeName,evidence,
-    * severity)) as one expression over a sorted spans column — computed
-    * once into the round's cached page rows, then exploded by
-    * [[pageDefects]] (the heavy expression evaluates exactly once per
-    * page, inside the cache materialization). Each checker's
-    * contribution is individually gated by its F12 (contentTypes ×
-    * uriRegex) dispatch table over (`ct`, `uri`).
-    */
-  def pageDefectsArr(sp: Column, ct: Column, uri: Column, cfg: CrawlConfig): Column =
-    gateDefects(pageDefectsPre(sp), ct, uri, cfg)
 
   /** Applies the F12 dispatch gates to a precomputed tagged defect array
     * ([[pageDefectsPre]]): whole plugin groups survive or vanish based

@@ -40,8 +40,8 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * so recovery never depends on executor-local blocks (a cluster
   * overlaps rounds at the storage layer instead). The cumulative
   * URL-seen table is a union of per-round deltas (never re-read from
-  * disk), and the seen-bloom is merged incrementally from each round's
-  * accepted delta instead of being rebuilt from a full seen scan.
+  * disk), and between compactions the seen prefilter merges each
+  * round's accepted delta instead of being rebuilt from a full seen scan.
   */
 object CrawlDriver {
 
@@ -315,24 +315,20 @@ object CrawlDriver {
 
   /** Run (or resume) a crawl; returns a handle over the snapshot dirs.
     *
+    * `bloomMinSeen`: the seen count at which the seen prefilter starts
+    * (below it the exact anti-join alone dedups; `Long.MaxValue` keeps
+    * the prefilter off).
+    *
     * `compactEvery`: every K rounds the cumulative seen/dup/known-maps
     * part lists (one cached delta per round) are compacted into a
     * single checkpointed table — without this, logical-plan size,
     * per-round analysis time and cached-block count grow O(rounds) and
     * a deep crawl (hundreds of BSP rounds) re-acquires a linear
-    * per-round fixed cost. Compaction also re-sizes the seen-bloom to
-    * the actual seen count (a fixed-capacity bloom's FP rate → 1 at
-    * 10^10 seen, degrading the prefilter to a no-op).
+    * per-round fixed cost. Compaction also rebuilds the seen prefilter
+    * at 4× the actual seen count when that grew ([[SeenPrefilterState]]).
     */
   def crawl(spark: SparkSession, world0: CrawlRound.WorldDF, cfg: CrawlConfig,
-      checkpointDir: String, useBloom: Boolean = true,
-      bloomMinSeen: Long = 100000L, compactEvery: Int = 8,
-      /** single-bloom broadcast budget: past it the prefilter switches
-        * to the bucket-sharded file-backed family (PartitionedBloom) */
-      bloomBudgetBytes: Long = 256L << 20,
-      /** bucket count of the partitioned family (sized so total-bitset
-        * ∕ buckets stays executor-cache friendly at target scale) */
-      bloomBuckets: Int = 8192,
+      checkpointDir: String, bloomMinSeen: Long = 100000L, compactEvery: Int = 8,
       /** distributed seed table (i: Long unique ascending, raw: String);
         * replaces cfg.seeds for wide frontiers (same push semantics).
         * Exclusive with cfg.seedEntries. */
@@ -341,18 +337,27 @@ object CrawlDriver {
         * knows it — skips the bootstrap's max(i) scan job. Must be
         * exact, not an estimate: it becomes the post-bootstrap nextSeq. */
       seedCountHint: Option[Long] = None): CrawlRun =
-    crawl(Placement.of(spark), spark, world0, cfg, checkpointDir, useBloom,
-      bloomMinSeen, compactEvery, bloomBudgetBytes,
-      bloomBuckets, seedSource, seedCountHint)
+    crawl(Placement.of(spark), spark, world0, cfg, checkpointDir, bloomMinSeen,
+      compactEvery, BloomBudgetBytes, BloomBuckets, seedSource, seedCountHint)
 
-  /** [[crawl]] under an explicit [[Placement]] (tests run the cluster
-    * placement on a local master).
+  /** Single-bloom broadcast budget: past it the seen prefilter is the
+    * bucket-sharded file family ([[graft.seen.PartitionedBloom]]).
+    */
+  private val BloomBudgetBytes = 256L << 20
+  /** Bucket count of that family (total bitset ∕ buckets stays executor-
+    * cache friendly at the 10^10 design point).
+    */
+  private val BloomBuckets = 8192
+
+  /** [[crawl]] under an explicit [[Placement]] and prefilter geometry
+    * (tests run the cluster placement on a local master, and force the
+    * bucket family at test scale with a tiny budget).
     */
   private[frontier] def crawl(placement: Placement, spark: SparkSession,
       world0: CrawlRound.WorldDF, cfg: CrawlConfig, checkpointDir: String,
-      useBloom: Boolean, bloomMinSeen: Long,
-      compactEvery: Int, bloomBudgetBytes: Long, bloomBuckets: Int,
-      seedSource: Option[DataFrame], seedCountHint: Option[Long]): CrawlRun = {
+      bloomMinSeen: Long, compactEvery: Int, bloomBudgetBytes: Long,
+      bloomBuckets: Int, seedSource: Option[DataFrame],
+      seedCountHint: Option[Long]): CrawlRun = {
     require(seedSource.isEmpty || cfg.seedEntries.isEmpty,
       "seedSource and cfg.seedEntries are exclusive seed inputs")
     val store = new SnapshotStore(checkpointDir, spark)
@@ -414,8 +419,8 @@ object CrawlDriver {
         org.apache.spark.sql.types.StructField("count",
           org.apache.spark.sql.types.LongType)))
 
-      val prefilter = new SeenPrefilterState(useBloom, bloomMinSeen,
-        compactEvery, bloomBudgetBytes, bloomBuckets,
+      val prefilter = new SeenPrefilterState(bloomMinSeen, compactEvery,
+        bloomBudgetBytes, bloomBuckets,
         s"$checkpointDir/seen_bloom_buckets", c.seenCount, seenCum, c.round)
       try {
         while (c.frontierCount > 0 && (cfg.maxRounds <= 0 || c.round + 1 < cfg.maxRounds)) {
@@ -549,8 +554,9 @@ object CrawlDriver {
           }
 
           // ---- prefilter maintenance, dispatched async (awaited by the
-          // NEXT round's dedup-stage construction); the rebuild paths scan
-          // the just-compacted seen table, which contains this delta
+          // NEXT round's dedup-stage construction); a rebuild scans the
+          // whole seen table (just compacted on a compaction round),
+          // which contains this delta
           prefilter.absorb(round, state.seen, acceptedCount, c.seenCount,
             seenCum, doCompact)
 

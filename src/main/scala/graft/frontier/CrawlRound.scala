@@ -24,16 +24,17 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
   *   next frontier.
   *
   * Scale notes: no driver-side row state (only O(1) counters); global
-  * orderings via [[Ranks.withGlobalRank]] (range-partitioned, never a
-  * single-partition window); per-host windows partition by host (the
-  * salted host-partitioning axis); URL-seen dedup = bloom prefilter +
-  * exact anti-join ([[UrlSeen]]). Per-host tables are LOOKUPS, never
-  * joins: robots rules, crawl delay and sitemap locs are collected once
-  * per crawl into one [[HostTable]], and a polite round's host state
-  * (previous visit times + this round's first successes) into one
-  * per-round table from one job; rows probe them with the native
-  * [[HostLookup]] expression. No round plans a string-keyed broadcast
-  * hash join (each allocated a 16 MB page per relation).
+  * orderings via [[Ranks.withBoundedRank]] (buckets by arithmetic on
+  * frontier positions, never a single-partition window); per-host
+  * windows partition by host (the salted host-partitioning axis);
+  * URL-seen dedup = bloom prefilter + exact anti-join ([[UrlSeen]]).
+  * Per-host tables are LOOKUPS, never joins: robots rules, crawl delay
+  * and sitemap locs are collected once per crawl into one
+  * [[HostTable]], and a polite round's host state (previous visit times
+  * + this round's first successes) into one per-round table from one
+  * job; rows probe them with the native [[HostLookup]] expression. No
+  * round plans a string-keyed broadcast hash join (each allocated a
+  * 16 MB page per relation).
   */
 object CrawlRound {
 
@@ -245,7 +246,29 @@ object CrawlRound {
 
   private val LinkKinds = Seq("link", "css-link", "img", "iframe", "frame")
 
+  /** What a round owns before its [[RoundOut]] carries it. */
+  private final class Owned {
+    var hostTables: Seq[HostTable] = Nil
+    var prefilter: Option[UrlSeen.SeenPrefilter] = None
+  }
+
+  /** Builds round `in.round`. If building it throws, the round's host
+    * tables and prefilter broadcasts are destroyed before the rethrow:
+    * no [[RoundOut]] reaches the caller to release them.
+    */
   def run(spark: SparkSession, world: PreparedWorld, cfg: CrawlConfig, in: RoundIn): RoundOut = {
+    val owned = new Owned
+    try build(spark, world, cfg, in, owned)
+    catch {
+      case e: Throwable =>
+        owned.hostTables.foreach(_.destroy())
+        owned.prefilter.foreach(_.destroy())
+        throw e
+    }
+  }
+
+  private def build(spark: SparkSession, world: PreparedWorld, cfg: CrawlConfig,
+      in: RoundIn, owned: Owned): RoundOut = {
     // round-varying plan parameters ride the codegen references array
     // (graft.plans.Dyn) so every BSP round reuses the same compiled
     // classes instead of paying a fresh janino compile
@@ -348,10 +371,10 @@ object CrawlRound {
     // host table: one O(hosts) collect, probed per row. Only delayed
     // hosts' first successes matter (`defer` needs d). Worlds without
     // crawl delays skip the machinery entirely.
-    val (f4, roundTables) = if (!world.hasDelays) {
-      (f3.withColumns(ListMap(
+    val f4 = if (!world.hasDelays) {
+      f3.withColumns(ListMap(
         "hvt" -> lit(null).cast(DoubleType),
-        "defer" -> lit(false))), Nil)
+        "defer" -> lit(false)))
     } else {
       val firstSucc = f3
         .filter(col("wouldSucceed") && col("gate") === "pass" && col("d").isNotNull)
@@ -360,7 +383,8 @@ object CrawlRound {
       val prior = in.hostState.select(col("host"), col("lastVisitS").as("hvt"),
         lit(null).cast("long").as("fsp"))
       val state = HostTable.collect(unionByName(Seq(prior, firstSucc)))
-      (f3.withColumns(ListMap(
+      owned.hostTables = Seq(state)
+      f3.withColumns(ListMap(
           "hvt" -> state(col("host")).getField("hvt"),
           "firstSuccPos" -> state(col("host")).getField("fsp")))
         .withColumn("defer",
@@ -371,8 +395,7 @@ object CrawlRound {
               .when(col("hvt").isNotNull,
                 col("firstSuccPos").isNotNull && col("pos") > col("firstSuccPos"))
               .otherwise((col("d") > bound) &&
-                col("firstSuccPos").isNotNull && col("pos") > col("firstSuccPos")))),
-        Seq(state))
+                col("firstSuccPos").isNotNull && col("pos") > col("firstSuccPos"))))
     }
 
     // ---- body (J6b: slim per-doc feature join; the heavy spans were
@@ -727,10 +750,10 @@ object CrawlRound {
         col("k.cdepth").as("cdepth"), col("k.referer").as("referer"),
         col("k.smHost").as("smHost"))
       .withColumn("method", lit("GET"))
-    val prefilter = in.seenBloom()
+    owned.prefilter = in.seenBloom()
     val newItems = UrlSeen.dedupeAgainstSeen(
       firstKids, in.seen.map(_.select(col("uri").as("canon"), col("method"))),
-      "canon", "method", prefilter)
+      "canon", "method", owned.prefilter)
 
     // urlLimit (F10): global dense rank by seq vs the remaining budget;
     // over-limit items vanish entirely (SeenLimit: no rows logged)
@@ -838,6 +861,6 @@ object CrawlRound {
       allDefects, hostStateOut,
       dupStateDelta, knownMapsDelta, headersOut, cookiesOut, lineage,
       cached = Seq(f5c, kids2, acceptedC, frontierOut),
-      hostTables = roundTables, prefilter = prefilter)
+      hostTables = owned.hostTables, prefilter = owned.prefilter)
   }
 }

@@ -3,10 +3,8 @@ package graft.frontier
 import graft.seen.{PartitionedBloom, UrlSeen}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.shim.unionByName
 import org.apache.spark.util.sketch.BloomFilter
 
-import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
@@ -16,19 +14,20 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * an oversize seen set only raises the false-positive rate, which costs
   * exact-verify work, never correctness.
   *
-  * Within the broadcast budget it is one bloom sized by observed load: 4×
-  * the seen count it was built at (floor 1,024 keys), per-round delta
-  * blooms merge into it bit-for-bit, and it is rebuilt at 4× the seen
-  * count once that passes its capacity (a fixed 2^20-key floor made
-  * every small crawl carry a 2.4 MB bitset, re-copied each round into
-  * bytes, a broadcast and executor cache entries). Past the budget, the bucket-sharded
-  * file family ([[PartitionedBloom]]), whose epoch dirs live under
-  * `familyBase`, keyed by the round that wrote them. The family merges
-  * once per compaction window (a per-round merge touches every bucket
-  * once delta ≫ buckets — a full family rewrite per round at the 10^10
-  * design point); meanwhile the window's deltas ride a small
-  * fixed-capacity "recent" bloom OR'd with the family
-  * ([[UrlSeen.CompositePrefilter]]).
+  * One rule rebuilds it from the whole seen table: when the round
+  * compacted and the seen count grew since the last rebuild, when the
+  * seen count passed the single bloom's capacity, or when the seen count
+  * first reached `bloomMinSeen` (below it the prefilter is off). Every capacity comes from the seen count: a
+  * rebuild at `seen` keys takes one bloom of 4× `seen` (floor 1,024
+  * keys) while that bitset is within `budgetBytes`, else the
+  * bucket-sharded file family ([[PartitionedBloom]], epoch dirs under
+  * `familyBase`, keyed by the round that wrote them) at 4× `seen` ∕
+  * `buckets` per bucket. Between rebuilds each round's delta bloom
+  * merges bit-for-bit into the single bloom, or, past the budget, into a
+  * small "recent" bloom OR'd with the family
+  * ([[UrlSeen.CompositePrefilter]]), so the family is written once per
+  * compaction window, never per round (a per-round write touches every
+  * bucket once delta ≫ buckets).
   *
   * Builds and merges run ASYNCHRONOUSLY on one daemon thread, so a
   * round's bloom job overlaps the next round's plan construction and
@@ -36,38 +35,35 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * bytes. Construction dispatches the initial build over `seen0` (the
   * whole recovered seen table) at epoch `epoch0`.
   */
-private[frontier] final class SeenPrefilterState(useBloom: Boolean,
-    bloomMinSeen: Long, compactEvery: Int, budgetBytes: Long, buckets: Int,
-    familyBase: String, seenCount0: Long, seen0: => DataFrame, epoch0: Int) {
+private[frontier] final class SeenPrefilterState(bloomMinSeen: Long,
+    compactEvery: Int, budgetBytes: Long, buckets: Int, familyBase: String,
+    seenCount0: Long, seen0: => DataFrame, epoch0: Int) {
 
   private val ec = ExecutionContext.fromExecutorService(
     java.util.concurrent.Executors.newSingleThreadExecutor(r => {
       val t = new Thread(r, "graft-bloom-merge"); t.setDaemon(true); t
     }))
   private val minSeen = math.max(bloomMinSeen, 1L)
-  // design capacity: decides single bloom vs family against the budget,
-  // sizes the family, caps the single bloom; re-sized at compaction
-  private var capacity = math.max(4L * minSeen, 1L << 20)
-  // the single bloom's own capacity (its delta blooms share it)
-  private var bloomCap = 0L
+  private val MinCap = 1024L
+  // the seen count at the last rebuild
+  private var built = 0L
+  // the seen count past which `absorb` rebuilds outside compaction: the
+  // single bloom's capacity; 0 before the first build; unbounded for the
+  // family, which is rebuilt at compaction only
+  private var cap = 0L
   private var bloomFut: Future[Option[BloomFilter]] = Future.successful(None)
   private var famFut: Future[Option[PartitionedBloom.BloomFamily]] =
     Future.successful(None)
-  // family mode: deltas since the last family sync, and the recent bloom
-  // over them (same capacity across a window so mergeInPlace composes)
-  private val pendingParts = ArrayBuffer.empty[DataFrame]
-  private var pendingCount = 0L
+  // family mode: the recent bloom over the deltas since the last
+  // rebuild, one capacity per window so mergeInPlace composes
   private var recentCap = 0L
   private var recentFut: Future[Option[BloomFilter]] = Future.successful(None)
 
-  if (useBloom && seenCount0 >= minSeen) rebuild(seen0, epoch0, seenCount0)
+  if (seenCount0 >= minSeen) rebuild(seen0, epoch0, seenCount0)
 
   private def bloomOf(seen: DataFrame, cap: Long): BloomFilter =
     UrlSeen.deserialize(UrlSeen.buildBloom(seen,
       UrlSeen.seenKey(col("uri"), col("method")), cap))
-
-  private def seenKeys(seen: DataFrame): DataFrame =
-    seen.select(UrlSeen.seenKey(col("uri"), col("method")).as("k"))
 
   private def bytes(b: BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -75,49 +71,31 @@ private[frontier] final class SeenPrefilterState(useBloom: Boolean,
     bos.toByteArray
   }
 
-  /** Full build from the whole seen table (`seenCount` keys): the single
-    * bloom at 4× the seen count (at most the design capacity) while the
-    * design capacity is within the broadcast budget — past it the
-    * re-sized bitset is undeliverable and an under-sized bloom's FP rate
-    * → 1 — else the bucket family at capacity ∕ buckets per bucket.
+  /** Full build from the whole seen table (`seenCount` keys): past the
+    * budget the single bitset is undeliverable and an under-sized
+    * bloom's FP rate → 1, so the family takes over.
     */
   private def rebuild(seen: DataFrame, epoch: Int, seenCount: Long): Unit = {
-    if (UrlSeen.bloomWithinBudget(capacity, budgetBytes = budgetBytes)) {
-      bloomCap = math.min(math.max(4L * seenCount, 1024L), capacity)
-      val cap = bloomCap
-      bloomFut = Future(Some(bloomOf(seen, cap)))(ec)
+    val keys = 4L * seenCount
+    built = seenCount
+    recentCap = 0L
+    recentFut = Future.successful(None)
+    if (UrlSeen.bloomWithinBudget(keys, budgetBytes = budgetBytes)) {
+      cap = math.max(keys, MinCap)
+      val c = cap
+      bloomFut = Future(Some(bloomOf(seen, c)))(ec)
       famFut = Future.successful(None)
     } else {
+      cap = Long.MaxValue
       bloomFut = Future.successful(None)
-      val cap = capacity
-      famFut =
-        if (buckets <= 0) Future.successful(None)
-        else Future({
-          val f = PartitionedBloom.build(seenKeys(seen), familyBase, buckets,
-            math.max(64L, cap / buckets), epoch = epoch)
-          PartitionedBloom.gcEpochs(f) // superseded epochs die with the build
-          Some(f)
-        })(ec)
+      famFut = Future({
+        val f = PartitionedBloom.build(
+          seen.select(UrlSeen.seenKey(col("uri"), col("method")).as("k")),
+          familyBase, buckets, math.max(64L, keys / buckets), epoch = epoch)
+        PartitionedBloom.gcEpochs(f) // superseded epochs die with the build
+        Some(f)
+      })(ec)
     }
-  }
-
-  /** Recent-bloom capacity for one window of deltas: this window's
-    * actual total when one just closed, else scaled from this round's
-    * delta; clamped to the broadcast budget (an under-sized recent bloom
-    * only raises its FP rate).
-    */
-  private def windowCap(deltaCount: Long): Long = {
-    val est = math.max(math.max(pendingCount + deltaCount,
-      deltaCount * math.max(compactEvery, 1)), bloomMinSeen)
-    math.min(math.max(4L * est, 1L << 20),
-      math.max(budgetBytes * 8L * 10L / 192L, 1L << 20))
-  }
-
-  private def resetWindow(deltaCount: Long): Unit = {
-    recentCap = windowCap(deltaCount)
-    pendingParts.clear()
-    pendingCount = 0L
-    recentFut = Future.successful(None)
   }
 
   /** The prefilter covering every seen key up to the previous round
@@ -137,55 +115,35 @@ private[frontier] final class SeenPrefilterState(useBloom: Boolean,
   /** Dispatches the maintenance for round `round`'s accepted delta
     * (`deltaCount` rows, `seenCount` cumulative). `seenAll` is the whole
     * seen table including the delta; `compacted` marks a compaction
-    * round. In order of preference: a compaction re-size (capacity ≥ 4×
-    * seen keeps the FP rate at design level), the family's batched merge
-    * on the compaction cadence, the single bloom's re-size once the seen
-    * count passes its capacity, the delta merge, a late first build.
+    * round.
     */
   def absorb(round: Int, delta: DataFrame, deltaCount: Long, seenCount: Long,
       seenAll: DataFrame, compacted: Boolean): Unit = {
     val prevBloom = Await.result(bloomFut, Duration.Inf)
     val prevFam = Await.result(famFut, Duration.Inf)
-    if (compacted && useBloom && (prevBloom.isDefined || prevFam.isDefined) &&
-        seenCount > capacity / 4) {
-      capacity = 4L * seenCount
-      resetWindow(deltaCount)
+    if (seenCount >= minSeen && (compacted && seenCount > built || seenCount > cap))
       rebuild(seenAll, round, seenCount)
-    } else if (compacted && useBloom && prevFam.isDefined) {
-      // all pending delta keys (this round's included) go into the family
-      // under ONE new epoch: each touched bucket is read+written once per
-      // window, keeping maintenance I/O at O(family) per window
-      val fam = prevFam.get
-      val pendingKeys = seenKeys(unionByName(pendingParts.toSeq :+ delta))
-      resetWindow(deltaCount)
-      famFut = Future({
-        val merged = PartitionedBloom.merge(pendingKeys, fam, round)
-        PartitionedBloom.gcEpochs(merged)
-        Some(merged)
-      })(ec)
-    } else if (useBloom && deltaCount > 0) (prevBloom, prevFam) match {
-      case (Some(_), _) if seenCount > bloomCap && bloomCap < capacity =>
-        rebuild(seenAll, round, seenCount)
+    else if (deltaCount > 0) (prevBloom, prevFam) match {
       case (Some(b), _) =>
-        val cap = bloomCap
-        bloomFut = Future({ b.mergeInPlace(bloomOf(delta, cap)); Some(b) })(ec)
+        val c = cap
+        bloomFut = Future({ b.mergeInPlace(bloomOf(delta, c)); Some(b) })(ec)
       case (None, Some(_)) =>
-        // mid-window: the delta joins the pending set and the recent bloom
-        pendingParts += delta
-        pendingCount += deltaCount
-        if (recentCap <= 0) recentCap = windowCap(deltaCount)
-        val cap = recentCap
+        // a window's first delta sizes its recent bloom for the whole
+        // window, clamped to the budget (an under-sized recent bloom
+        // only raises its FP rate)
+        if (recentCap <= 0)
+          recentCap = math.min(
+            math.max(4L * deltaCount * math.max(compactEvery, 1), MinCap),
+            math.max(budgetBytes * 8L * 10L / 192L, MinCap))
+        val c = recentCap
         val prevRecent = Await.result(recentFut, Duration.Inf)
         recentFut = Future({
-          val d = bloomOf(delta, cap)
+          val d = bloomOf(delta, c)
           Some(prevRecent match {
             case Some(r) => r.mergeInPlace(d); r
             case None => d
           })
         })(ec)
-      case (None, None) if seenCount >= minSeen =>
-        resetWindow(deltaCount)
-        rebuild(seenAll, round, seenCount)
       case _ => ()
     }
   }

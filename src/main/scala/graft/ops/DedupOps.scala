@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *             hamming verify
   *  - ngram Jaccard: exact verification measure on shingle sets
   *
-  * All signatures/sketches are pure Catalyst higher-order expressions
-  * (transform/aggregate/zip_with) — codegen-friendly, scale with a scan.
+  * Signatures, sketches and shingles are native Catalyst expressions
+  * ([[MinHashSig]], [[SimHashSketch]], [[WordShingles]],
+  * [[JaccardShingles]]) — one compiled loop per row, scale with a scan.
   */
 object DedupOps {
 
@@ -50,48 +51,26 @@ object DedupOps {
 
   /** Word shingles (n-grams of tokens) as an array column: a native
     * expression ([[WordShingles]]) — one compiled loop per row instead
-    * of the interpreted transform/slice/concat_ws ladder (the HOF form
-    * below stays as the bit-for-bit spec twin).
+    * of the interpreted transform/slice/concat_ws ladder (OpsSpec pins
+    * it bit-for-bit against that higher-order-function form).
     */
   def shingles(text: Column, n: Int): Column = {
     import org.apache.spark.sql.graft.shim.{toColumn, toExpression}
     toColumn(WordShingles(toExpression(split(lower(trim(text)), "\\s+")), n))
   }
 
-  /** The pre-round-6 higher-order-function form of [[shingles]];
-    * retained as the independent reference implementation the native
-    * expression is unit-tested bit-for-bit against.
-    */
-  def shinglesHof(text: Column, n: Int): Column = {
-    val tokens = split(lower(trim(text)), "\\s+")
-    when(size(tokens) < n, array(concat_ws(" ", tokens)))
-      .otherwise(transform(sequence(lit(0), size(tokens) - n),
-        i => concat_ws(" ", slice(tokens, i + 1, lit(n)))))
-  }
-
   /** MinHash signature: K permutations h_i(x) = xxhash64(xxhash64(x), i);
     * signature[i] = min over shingles. A native expression
     * ([[MinHashSig]]): one pass over the shingle array, each shingle
     * string-hashed once then K cheap long-mixes in a compiled loop —
-    * the higher-order aggregate/zip_with form (kept below for the
-    * equivalence spec) allocated a K-array per shingle in interpreted
+    * the higher-order aggregate/zip_with form (OpsSpec's equivalence
+    * twin) allocated a K-array per shingle in interpreted
     * lambda eval and dominated dd_minhash_pairs in BENCH_r04.
     */
   def minhashSignature(shingleCol: Column, k: Int): Column = {
     import org.apache.spark.sql.graft.shim.{toColumn, toExpression}
     toColumn(MinHashSig(toExpression(shingleCol), k))
   }
-
-  /** The pre-round-5 higher-order-function form of [[minhashSignature]];
-    * retained as the independent reference implementation the native
-    * expression is unit-tested bit-for-bit against.
-    */
-  def minhashSignatureHof(shingleCol: Column, k: Int): Column =
-    aggregate(
-      transform(shingleCol, s => xxhash64(s)),
-      array_repeat(lit(Long.MaxValue), k),
-      (acc, h) => zip_with(acc, sequence(lit(0), lit(k - 1)),
-        (a, i) => least(a, xxhash64(h, i))))
 
   /** Banded-LSH candidate pairs: split the K-length signature into
     * `bands` bands, bucket-join on (band index, band hash), verify with
@@ -163,44 +142,14 @@ object DedupOps {
     toColumn(JaccardShingles(toExpression(a), toExpression(b)))
   }
 
-  /** The pre-round-6 built-in-array-function form of [[jaccard]];
-    * retained as the spec twin for the equivalence test.
-    */
-  def jaccardHof(a: Column, b: Column): Column = {
-    val ad = array_distinct(a)
-    val bd = array_distinct(b)
-    val inter = size(array_intersect(ad, bd)).cast("double")
-    val union = size(array_union(ad, bd)).cast("double")
-    when(union === 0, 0.0).otherwise(inter / union)
-  }
-
   /** 64-bit SimHash: per token-hash, each bit contributes ±1; the sign
     * of each accumulated counter forms the sketch bit. A native
     * expression ([[SimHashSketch]]) — one compiled loop per row; the
-    * aggregate/zip_with form below stays as the bit-for-bit spec twin.
+    * aggregate/zip_with form is OpsSpec's bit-for-bit spec twin.
     */
   def simhash64(text: Column): Column = {
     import org.apache.spark.sql.graft.shim.{toColumn, toExpression}
     toColumn(SimHashSketch(toExpression(split(lower(trim(text)), "\\s+"))))
-  }
-
-  /** The pre-round-6 higher-order-function form of [[simhash64]];
-    * retained as the spec twin for the equivalence test.
-    */
-  def simhash64Hof(text: Column): Column = {
-    val tokens = split(lower(trim(text)), "\\s+")
-    val counters = aggregate(
-      tokens,
-      array_repeat(lit(0L), 64),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc, sequence(lit(0), lit(63)),
-          (c, i) => c + when(call_function("shiftright", h, i).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      })
-    aggregate(
-      zip_with(counters, sequence(lit(0), lit(63)),
-        (c, i) => when(c > 0, call_function("shiftleft", lit(1L), i)).otherwise(0L)),
-      lit(0L), (acc, bit) => acc.bitwiseOR(bit))
   }
 
   /** Hamming distance between two 64-bit sketches. */

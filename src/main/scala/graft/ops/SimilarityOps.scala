@@ -99,12 +99,6 @@ object SimilarityOps {
       struct(b.cast("int").as("band"), element_at(ch, b + 1).as("chunk")))
   }
 
-  /** Sign sketch packed into ONE long (≤ 64 planes): plane p's sign is
-    * bit p — a single band of `planes` chunk bits.
-    */
-  def hyperplaneSketch(vec: Column, planes: Int, dims: Int = 64): Column =
-    element_at(bandChunksLongs(vec, 1, planes, dims), 1)
-
   /** Build-once LSH index: the banded sketch rows (idCol, band, chunk)
     * of the corpus. Persist (or write out bucketed by (band, chunk))
     * once; every probe joins against it. One scan of the vectors, one
@@ -333,19 +327,6 @@ object SimilarityOps {
       .select(col(idCol), round(cosine(col(vecCol), typedLit(query)), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
-  }
-
-  /** One-shot IVF top-k = train + build + probe in one call
-    * (correctness surface; a probe-many workload persists
-    * [[buildIvfIndex]] once and calls [[probeIvfTopK]] per query —
-    * see SparkEntry's ann_ivf_index_build / ann_ivf_probe pair).
-    */
-  def ivfTopK(df: DataFrame, vecCol: String, idCol: String,
-      query: Seq[Float], k: Int, nClusters: Int = 16, nprobe: Int = 4,
-      dims: Int = 64): DataFrame = {
-    val cents = trainCentroids(df, vecCol, idCol, nClusters, dims = dims)
-    probeIvfTopK(buildIvfIndex(df, vecCol, idCol, cents, dims),
-      vecCol, idCol, query, cents, k, nprobe, dims)
   }
 
   /** Embedding-cosine near-dup pairs via sketch-band bucketing (the

@@ -7,19 +7,19 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst twins of the interpreted higher-order-function
-  * sketch/shingle expressions in [[DedupOps]]/[[TextOps]] (the
+/** Native Catalyst twins of interpreted higher-order-function (HOF)
+  * sketch/shingle expressions, used by [[DedupOps]]/[[TextOps]] (the
   * MinHashSig pattern, round-5): higher-order functions
   * (aggregate/transform/zip_with/filter) never whole-stage-codegen and
   * allocate per-element lambda rows, which dominated dd_simhash_*,
   * dd_ngram_jaccard and tx_lang_id in BENCH_r05. Each expression here
   * is one compiled loop, BIT-FOR-BIT equal to its HOF form (the HOF
-  * forms are kept and pinned by OpsSpec equivalence tests, and the
+  * forms live in OpsSpec, pinned by its equivalence tests, and the
   * planted/natural DuckDB oracles pin the derived outputs end-to-end).
   */
 
 /** 64-bit SimHash over a token array — the compiled twin of
-  * [[DedupOps.simhash64Hof]]'s aggregate/zip_with ladder: per token,
+  * `OpsSpec.simhash64Hof`'s aggregate/zip_with ladder: per token,
   * h = xxhash64(token) (seed 42; a null token leaves the hash at the
   * seed, exactly like the XxHash64 expression), each of the 64 bits of
   * h moves its counter ±1, and sketch bit i is set iff counter(i) > 0.
@@ -70,7 +70,7 @@ case class SimHashSketch(child: Expression) extends UnaryExpression {
 }
 
 /** Word n-gram shingles over a token array — the compiled twin of
-  * [[DedupOps.shinglesHof]]'s transform/slice/concat_ws chain: fewer
+  * `OpsSpec.shinglesHof`'s transform/slice/concat_ws chain: fewer
   * than n tokens yield the single space-joined token string; otherwise
   * every length-n window joined by " " (concat_ws semantics: null
   * tokens are skipped in the join, windows are in order, duplicates
@@ -126,7 +126,7 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
 }
 
 /** Exact Jaccard over two string arrays — the compiled twin of
-  * [[DedupOps.jaccardHof]]'s array_distinct/intersect/union chain:
+  * `OpsSpec.jaccardHof`'s array_distinct/intersect/union chain:
   * |distinct(a) ∩ distinct(b)| / |distinct(a) ∪ distinct(b)| as the
   * same int-cardinality double division (null elements count as one
   * distinct value, like array_distinct), 0.0 on an empty union.

@@ -7,12 +7,12 @@ import org.apache.spark.sql.functions._
 /** Scalable global ordering primitives.
   *
   * A naive `row_number().over(Window.orderBy(...))` collapses the whole
-  * dataset into ONE partition — fatal at 10^10-frontier scale. This
-  * helper computes a dense global 0-based rank with the classic
-  * two-phase pattern: range-repartition on the sort keys, rank locally
-  * per partition, then add broadcast per-partition offsets (one tiny
-  * count aggregation). Deterministic provided the sort keys are unique
-  * (range boundaries only decide placement, never the rank value).
+  * dataset into ONE partition — fatal at 10^10-frontier scale. These
+  * helpers use the classic two-phase pattern instead: bucket the rows
+  * by arithmetic on a monotone key of known range, rank or sum locally
+  * per bucket, then add broadcast per-bucket offsets (one tiny
+  * aggregation). Deterministic provided the order keys are unique
+  * (bucket boundaries only decide placement, never the result).
   */
 object Ranks {
 
@@ -24,34 +24,12 @@ object Ranks {
     * row_number + bucket offsets give the exact dense rank.
     */
   def withBoundedRank(df: DataFrame, orderCols: Seq[Column], rankCol: String,
-      bucketKey: Column, lo: Long, hi: Long, numPartitions: Option[Int] = None): DataFrame = {
-    val spark = df.sparkSession
-    val p = numPartitions.getOrElse(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val span = math.max(1L, hi - lo)
-    // lo/span are per-round values: Dyn keeps them out of the codegen
-    // source so successive rounds reuse compiled classes
-    val bucket = least(lit(p - 1L), greatest(lit(0L),
-      ((bucketKey - Dyn.dynLong(lo)) * p / Dyn.dynLong(span)))).cast("int")
-    val parted = df.withColumn("__gr_pid", bucket)
-      .repartition(p, col("__gr_pid"))
-    // ≤ P rows: a CONSTANT partition key keeps the prefix-sum window
-    // single-partition BY DECLARATION (it is tiny by construction). It
-    // must be non-foldable: Spark 4's EliminateWindowPartitions rule
-    // folds a plain lit(0) away, reintroducing WindowExec's no-partition
-    // warning on every round — DynLiteral(0) is constant but unfoldable
-    val offsets = parted.groupBy(col("__gr_pid")).agg(count(lit(1)).as("__gr_cnt"))
-      .withColumn("__gr_off",
-        coalesce(sum(col("__gr_cnt")).over(
-          Window.partitionBy(Dyn.dynInt(0)).orderBy(col("__gr_pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__gr_pid"), col("__gr_off"))
-    parted
-      .join(broadcast(offsets), "__gr_pid")
+      bucketKey: Column, lo: Long, hi: Long): DataFrame =
+    withBucketOffsets(df, bucketKey, lo, hi, None)
       .withColumn(rankCol,
         row_number().over(Window.partitionBy(col("__gr_pid")).orderBy(orderCols: _*))
           .cast("long") + col("__gr_off") - 1L)
       .drop("__gr_pid", "__gr_off")
-  }
 
   /** Adds `prefixCol` = sum of `weightCol` over all rows with a smaller
     * `keyCol` (exclusive prefix sum in key order; keys must be unique).
@@ -62,60 +40,43 @@ object Ranks {
     * the O(links) exploded rows.
     */
   def withBoundedPrefixSum(df: DataFrame, keyCol: Column, weightCol: Column,
-      prefixCol: String, lo: Long, hi: Long,
-      numPartitions: Option[Int] = None): DataFrame = {
-    val spark = df.sparkSession
-    val p = numPartitions.getOrElse(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val span = math.max(1L, hi - lo)
-    val bucket = least(lit(p - 1L), greatest(lit(0L),
-      ((keyCol - Dyn.dynLong(lo)) * p / Dyn.dynLong(span)))).cast("int")
-    val parted = df.withColumn("__gr_pid", bucket)
-      .withColumn("__gr_w", weightCol.cast("long"))
-      .repartition(p, col("__gr_pid"))
-    val offsets = parted.groupBy(col("__gr_pid")).agg(sum(col("__gr_w")).as("__gr_cnt"))
-      .withColumn("__gr_off",
-        coalesce(sum(col("__gr_cnt")).over(
-          Window.partitionBy(Dyn.dynInt(0)).orderBy(col("__gr_pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__gr_pid"), col("__gr_off"))
-    parted
-      .join(broadcast(offsets), "__gr_pid")
+      prefixCol: String, lo: Long, hi: Long): DataFrame =
+    withBucketOffsets(df, keyCol, lo, hi, Some(weightCol))
       .withColumn(prefixCol,
         col("__gr_off") + coalesce(
           sum(col("__gr_w")).over(
             Window.partitionBy(col("__gr_pid")).orderBy(keyCol)
               .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .drop("__gr_pid", "__gr_off", "__gr_w")
-  }
 
-  /** Adds `rankCol` = dense global 0-based rank by `orderCols` (which
-    * must be a unique key). Cost: one range shuffle + one tiny count agg.
+  /** `df` hash-shuffled into one bucket per shuffle partition by
+    * arithmetic on `bucketKey` in [lo, hi) (`__gr_pid`), each row joined
+    * to its bucket's offset `__gr_off`: the row count of every earlier
+    * bucket, or with a `weight` (carried as `__gr_w`) its sum.
     */
-  def withGlobalRank(df: DataFrame, orderCols: Seq[Column], rankCol: String,
-      numPartitions: Option[Int] = None): DataFrame = {
-    val spark = df.sparkSession
-    val p = numPartitions.getOrElse(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val parted = df
-      .repartitionByRange(p, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-      .withColumn("__gr_pid", spark_partition_id())
-    // per-partition offsets: P rows — broadcast join, no second big shuffle
+  private def withBucketOffsets(df: DataFrame, bucketKey: Column, lo: Long,
+      hi: Long, weight: Option[Column]): DataFrame = {
+    val p = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val span = math.max(1L, hi - lo)
+    // lo/span are per-round values: Dyn keeps them out of the codegen
+    // source so successive rounds reuse compiled classes
+    val bucket = least(lit(p - 1L), greatest(lit(0L),
+      ((bucketKey - Dyn.dynLong(lo)) * p / Dyn.dynLong(span)))).cast("int")
+    val keyed = df.withColumn("__gr_pid", bucket)
+    val parted = weight.fold(keyed)(w => keyed.withColumn("__gr_w", w.cast("long")))
+      .repartition(p, col("__gr_pid"))
+    val size = if (weight.isEmpty) count(lit(1)) else sum(col("__gr_w"))
     // ≤ P rows: a CONSTANT partition key keeps the prefix-sum window
     // single-partition BY DECLARATION (it is tiny by construction). It
     // must be non-foldable: Spark 4's EliminateWindowPartitions rule
     // folds a plain lit(0) away, reintroducing WindowExec's no-partition
     // warning on every round — DynLiteral(0) is constant but unfoldable
-    val offsets = parted.groupBy(col("__gr_pid")).agg(count(lit(1)).as("__gr_cnt"))
+    val offsets = parted.groupBy(col("__gr_pid")).agg(size.as("__gr_cnt"))
       .withColumn("__gr_off",
         coalesce(sum(col("__gr_cnt")).over(
           Window.partitionBy(Dyn.dynInt(0)).orderBy(col("__gr_pid"))
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("__gr_pid"), col("__gr_off"))
-    parted
-      .join(broadcast(offsets), "__gr_pid")
-      .withColumn(rankCol,
-        row_number().over(Window.partitionBy(col("__gr_pid")).orderBy(orderCols: _*))
-          .cast("long") + col("__gr_off") - 1L)
-      .drop("__gr_pid", "__gr_off")
+    parted.join(broadcast(offsets), "__gr_pid")
   }
 }

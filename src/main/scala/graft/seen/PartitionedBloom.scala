@@ -22,11 +22,10 @@ import org.apache.spark.util.sketch.BloomFilter
   *     demand, through a bounded per-JVM cache ([[BucketBloomCache]]) —
   *     per-executor footprint is O(touched buckets × bitset/buckets),
   *     not O(total bitset), and the driver never holds any bitset;
-  *   - per-round maintenance is LSM-shaped: the round's accepted delta
-  *     is bucketed and merged into ONLY the touched buckets' blooms,
-  *     written under a fresh epoch dir (tmp + rename, deterministic
-  *     content so task retries are idempotent); untouched buckets keep
-  *     their prior epoch's file — no copy-forward, no full rewrite;
+  *   - every build or merge writes under a fresh epoch dir (tmp +
+  *     rename, deterministic content so task retries are idempotent); a
+  *     merge rewrites ONLY the buckets its keys touch, and untouched
+  *     buckets keep their prior epoch's file — no copy-forward;
   *   - the probe routes each key through a tiny broadcast
   *     `bucket → epoch` map (≤ `buckets` ints at any scale). A bucket
   *     absent from the map has never held a seen key, so the probe
@@ -136,15 +135,12 @@ object PartitionedBloom {
       written.map(_ -> epoch).toMap)
   }
 
-  /** Merge accumulated delta keys into the family under a new epoch:
-    * only touched buckets are rewritten; the rest keep their epoch.
-    * Called on the COMPACTION cadence, not per round — with
-    * xxhash64-uniform keys any delta ≫ buckets touches every bucket,
-    * so a per-round merge degenerated to a full family rewrite per
-    * round (~2× family size of I/O each round at the 10^10 design
-    * point); batching K rounds of deltas bounds that rewrite to once
-    * per compaction window, while the un-merged window rides the
-    * driver's small recent-delta bloom ([[UrlSeen.CompositePrefilter]]).
+  /** Merge delta keys into the family under a new epoch: only touched
+    * buckets are rewritten; the rest keep their epoch. The crawl engine
+    * does not merge (with xxhash64-uniform keys any delta ≫ buckets
+    * touches every bucket, so a merge costs a full family rewrite): it
+    * rebuilds the family at compaction and carries the deltas between
+    * rebuilds in a recent bloom ([[UrlSeen.CompositePrefilter]]).
     */
   def merge(deltaKeys: DataFrame, fam: BloomFamily, epoch: Int): BloomFamily = {
     val written = writeEpoch(deltaKeys, fam.base, fam.buckets,
@@ -153,8 +149,8 @@ object PartitionedBloom {
   }
 
   /** Delete bucket files (and then-empty epoch dirs) no longer
-    * referenced by `fam.epochs` — the files superseded by merges and
-    * rebuilds. Safe to run right after a build/merge completes and
+    * referenced by `fam.epochs` — the files superseded by rebuilds and
+    * merges. Safe to run right after a build/merge completes and
     * before the new family is handed to a probe: the driver sequences
     * rounds, so no in-flight task still probes a superseded epoch.
     * Returns the number of files deleted.
@@ -184,7 +180,7 @@ object PartitionedBloom {
 
 /** Bounded per-JVM cache of bucket blooms keyed by (base, epoch,
   * bucket): each executor inflates only the bucket files its tasks
-  * probe, once, and old epochs age out as merges supersede them. The
+  * probe, once, and old epochs age out as rebuilds supersede them. The
   * bound caps executor memory at ~maxEntries × per-bucket bitset
   * (choose `buckets` so total-bitset ∕ buckets is small — e.g. 90 GB
   * at 4×10^10 capacity over 8192 buckets is ~11 MB per entry).

@@ -28,8 +28,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * At 10^10 scale the single merged bitset exceeds any broadcast
   * budget; past [[bloomWithinBudget]] the prefilter switches to the
   * bucket-sharded file-backed family ([[PartitionedBloom]]) — executors
-  * load only the bucket blooms their rows probe, and per-round
-  * maintenance rewrites only the touched buckets (LSM-style epochs).
+  * load only the bucket blooms their rows probe, and each rebuild
+  * writes a new epoch of bucket files.
   */
 object UrlSeen {
 
@@ -145,8 +145,8 @@ object UrlSeen {
 
   /** Union of two prefilters: "maybe seen" iff either says so. No false
     * negatives as long as every seen key is covered by at least one
-    * side — the batched-merge family cadence pairs the (lagging) bucket
-    * family with a small single bloom over the not-yet-merged deltas.
+    * side — the crawl pairs the bucket family, written at its last
+    * rebuild, with a small single bloom over the deltas since then.
     */
   final case class CompositePrefilter(a: SeenPrefilter, b: SeenPrefilter)
       extends SeenPrefilter {

@@ -37,7 +37,6 @@ object UrlBridge {
     def unquote(s: UTF8String): UTF8String =
       if (s.indexOf(PCT, 0) < 0) s
       else UTF8String.fromString(UrlFuncs.unquote(s.toString))
-    def quote(s: UTF8String): UTF8String = UTF8String.fromString(UrlFuncs.quote(s.toString))
     /** scheme ∈ {http, https} without string materialization: a
       * case-insensitive byte-prefix test for "http:"/"https:" (the only
       * way urlsplit yields scheme http/https).
@@ -51,13 +50,9 @@ object UrlBridge {
       } else false
     }
     def host(s: UTF8String): UTF8String = UTF8String.fromString(UrlFuncs.host(s.toString))
-    def scheme(s: UTF8String): UTF8String = UTF8String.fromString(UrlFuncs.scheme(s.toString))
     def normalize(s: UTF8String): UTF8String = UTF8String.fromString(UrlFuncs.urlNormalize(s.toString))
-    def canonSeed(s: UTF8String): UTF8String = UTF8String.fromString(UrlFuncs.canonSeed(s.toString))
     def urljoin(b: UTF8String, u: UTF8String): UTF8String =
       UTF8String.fromString(UrlFuncs.urljoin(b.toString, u.toString))
-    def canonLink(b: UTF8String, u: UTF8String): UTF8String =
-      UTF8String.fromString(UrlFuncs.canonLink(b.toString, u.toString))
     def pathq(s: UTF8String): UTF8String = {
       val rest = UrlFuncs.splitUrl(s.toString)._3
       UTF8String.fromString(if (rest.isEmpty) "/" else rest)
@@ -97,29 +92,14 @@ object UrlExpressions {
     protected def evalStr(s: UTF8String): UTF8String = UrlBridge.unquote(s)
     override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   }
-  case class UrlQuote(child: Expression) extends UrlUnary {
-    protected def fn = "quote"
-    protected def evalStr(s: UTF8String): UTF8String = UrlBridge.quote(s)
-    override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-  }
   case class UrlHost(child: Expression) extends UrlUnary {
     protected def fn = "host"
     protected def evalStr(s: UTF8String): UTF8String = UrlBridge.host(s)
     override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   }
-  case class UrlScheme(child: Expression) extends UrlUnary {
-    protected def fn = "scheme"
-    protected def evalStr(s: UTF8String): UTF8String = UrlBridge.scheme(s)
-    override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-  }
   case class UrlNormalizeExpr(child: Expression) extends UrlUnary {
     protected def fn = "normalize"
     protected def evalStr(s: UTF8String): UTF8String = UrlBridge.normalize(s)
-    override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-  }
-  case class UrlCanonSeed(child: Expression) extends UrlUnary {
-    protected def fn = "canonSeed"
-    protected def evalStr(s: UTF8String): UTF8String = UrlBridge.canonSeed(s)
     override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   }
 
@@ -161,33 +141,15 @@ object UrlExpressions {
       copy(l, r)
   }
 
-  /** Full discovered-link canonicalization: defrag∘unquote²∘quote∘urljoin
-    * (links_finder_plugin.py:56-66 + transaction.py:111,152).
-    */
-  case class UrlCanonLink(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType = StringType
-    override protected def nullSafeEval(b: Any, u: Any): Any =
-      UrlBridge.canonLink(b.asInstanceOf[UTF8String], u.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (b, u) => s"$B.canonLink($b, $u)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(l, r)
-  }
-
   // Column-level API
   def url_defrag(c: Column): Column = toColumn(UrlDefrag(toExpression(c)))
   def url_unquote2(c: Column): Column = toColumn(UrlUnquote2(toExpression(c)))
   def url_unquote(c: Column): Column = toColumn(UrlUnquote(toExpression(c)))
   def url_is_http(c: Column): Column = toColumn(UrlIsHttp(toExpression(c)))
-  def url_quote(c: Column): Column = toColumn(UrlQuote(toExpression(c)))
   def url_host(c: Column): Column = toColumn(UrlHost(toExpression(c)))
-  def url_scheme(c: Column): Column = toColumn(UrlScheme(toExpression(c)))
   def url_normalize(c: Column): Column = toColumn(UrlNormalizeExpr(toExpression(c)))
-  def url_canon_seed(c: Column): Column = toColumn(UrlCanonSeed(toExpression(c)))
   def url_pathq(c: Column): Column = toColumn(UrlPathQ(toExpression(c)))
   def url_is_valid(c: Column): Column = toColumn(UrlIsValid(toExpression(c)))
   def url_join(base: Column, href: Column): Column =
     toColumn(UrlJoin(toExpression(base), toExpression(href)))
-  def url_canon_link(base: Column, href: Column): Column =
-    toColumn(UrlCanonLink(toExpression(base), toExpression(href)))
 }

@@ -41,12 +41,12 @@ class EngineParitySpec extends AnyFunSuite {
       if (spec.sitemapEvery > 0) w.sitemaps.toDF() else null)
   }
 
-  private def runBoth(spec: WorldSpec, c: CrawlConfig, useBloom: Boolean = true)
+  // bloomMinSeen=0 so the bloom prefilter band is exercised at test scale
+  private def runBoth(spec: WorldSpec, c: CrawlConfig, bloomMinSeen: Long = 0L)
       : (RefCrawlOracle.CrawlOutput, CrawlDriver.CrawlRun) = {
     val oracle = RefCrawlOracle.crawl(WorldGen.localWorld(spec), c)
     val dir = Files.createTempDirectory(s"crawl-${spec.name}").toString
-    // bloomMinSeen=0 so the bloom prefilter band is exercised at test scale
-    val run = CrawlDriver.crawl(spark, world(spec), c, dir, useBloom, bloomMinSeen = 0L)
+    val run = CrawlDriver.crawl(spark, world(spec), c, dir, bloomMinSeen = bloomMinSeen)
     (oracle, run)
   }
 
@@ -394,7 +394,7 @@ class EngineParitySpec extends AnyFunSuite {
     val wdf = CrawlRound.WorldDF(w.docs.toDF(), w.urlMap.toDF(),
       w.hosts.toDF(), w.rules.toDF(), null)
     val dir = Files.createTempDirectory("crawl-default-confs").toString
-    val run = CrawlDriver.crawl(s2, wdf, c, dir, useBloom = true, bloomMinSeen = 0L)
+    val run = CrawlDriver.crawl(s2, wdf, c, dir, bloomMinSeen = 0L)
     assertParity(oracle, run)
   }
 
@@ -416,7 +416,7 @@ class EngineParitySpec extends AnyFunSuite {
       w.hosts.toDF(), w.rules.toDF(), null)
     val dir = Files.createTempDirectory("crawl-cluster-placement").toString
     val run = CrawlDriver.crawl(Placement(local = false), s2, wdf, c, dir,
-      useBloom = true, bloomMinSeen = 0L, compactEvery = 8,
+      bloomMinSeen = 0L, compactEvery = 8,
       bloomBudgetBytes = 256L << 20, bloomBuckets = 8192,
       seedSource = None, seedCountHint = None)
     assertParity(oracle, run)
@@ -430,7 +430,7 @@ class EngineParitySpec extends AnyFunSuite {
 
   test("parity holds without the bloom prefilter (exact band alone)") {
     val spec = WorldSpec("dedup-web", nHosts = 3, nDocs = 25, variantEvery = 2)
-    val (o, r) = runBoth(spec, cfg(spec), useBloom = false)
+    val (o, r) = runBoth(spec, cfg(spec), bloomMinSeen = Long.MaxValue)
     assertParity(o, r)
   }
 
@@ -490,20 +490,19 @@ class EngineParitySpec extends AnyFunSuite {
   test("parity with the PARTITIONED bloom family (past-budget prefilter)") {
     // bloomBudgetBytes=1 keeps the single merged bloom over budget, so
     // the prefilter runs the bucket-sharded file family for the whole
-    // crawl: initial build, COMPACTION-CADENCE batched merges (the
-    // un-merged window rides the recent-delta bloom composed with the
-    // family), and the compaction-time re-capacity rebuild all execute
-    // on a deep multi-round world — outputs must still equal the serial
-    // oracle bit-for-bit (band 2's exact anti-join is the truth; the
-    // family only routes candidates around it)
+    // crawl: the initial build, the recent-delta bloom composed with the
+    // family between compactions, and the rebuild at each compaction
+    // all execute on a deep multi-round world — outputs must still equal
+    // the serial oracle bit-for-bit (band 2's exact anti-join is the
+    // truth; the family only routes candidates around it)
     val spec = WorldSpec("deep-slow", nHosts = 2, nDocs = 44, hotPct = 50,
       slowEvery = 2, slowDelayS = 12.0)
     val c = cfg(spec)
     val oracle = RefCrawlOracle.crawl(WorldGen.localWorld(spec), c)
     val dir = Files.createTempDirectory("crawl-bucketbloom").toString
-    val run = CrawlDriver.crawl(spark, world(spec), c, dir,
-      bloomMinSeen = 0L, compactEvery = 5,
-      bloomBudgetBytes = 1L, bloomBuckets = 8)
+    val run = CrawlDriver.crawl(Placement.of(spark), spark, world(spec), c, dir,
+      bloomMinSeen = 0L, compactEvery = 5, bloomBudgetBytes = 1L, bloomBuckets = 8,
+      seedSource = None, seedCountHint = None)
     assertParity(oracle, run)
     // the family must actually have been used (epoch dirs exist), its
     // maintenance I/O must be on the COMPACTION cadence — epoch count
@@ -561,10 +560,11 @@ class EngineParitySpec extends AnyFunSuite {
     val oracle = RefCrawlOracle.crawl(WorldGen.localWorld(spec), c)
     val dir = Files.createTempDirectory("crawl-resume-bb").toString
     val broadcastsBefore = blocks.broadcastValues(spark.sparkContext).keySet
-    CrawlDriver.crawl(spark, world(spec), c.copy(maxRounds = 2), dir,
-      bloomMinSeen = 0L, bloomBudgetBytes = 1L, bloomBuckets = 8)
-    val resumed = CrawlDriver.crawl(spark, world(spec), c, dir,
-      bloomMinSeen = 0L, bloomBudgetBytes = 1L, bloomBuckets = 8)
+    def familyCrawl(c: CrawlConfig) = CrawlDriver.crawl(Placement.of(spark), spark,
+      world(spec), c, dir, bloomMinSeen = 0L, compactEvery = 8, bloomBudgetBytes = 1L,
+      bloomBuckets = 8, seedSource = None, seedCountHint = None)
+    familyCrawl(c.copy(maxRounds = 2))
+    val resumed = familyCrawl(c)
     // every crawl releases its background threads (bloomMinSeen = 0
     // starts the prefilter's; an in-flight build finishes first, hence
     // the bounded wait). Checked before the parity collects: a GC there

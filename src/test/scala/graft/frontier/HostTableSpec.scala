@@ -81,6 +81,56 @@ class HostTableSpec extends AnyFunSuite {
     } finally tables.foreach(_.destroy())
   }
 
+  test("a round that throws destroys its per-round host table and prefilter") {
+    import graft.model.CrawlConfig
+    import graft.synth.{WorldGen, WorldSpec}
+    import org.apache.spark.graft.blocks
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import s2.implicits._
+    // every host polite, so the round collects its per-round host table
+    // before it takes the prefilter
+    val spec = WorldSpec("polite-throw", nHosts = 2, nDocs = 10, politeEvery = 1)
+    val cfg = CrawlConfig(seeds = WorldGen.seeds(spec),
+      acceptedTypes = Seq("text/html", "image/png"))
+    val w = WorldGen.sparkWorld(s2, spec)
+    val world = CrawlRound.prepare(CrawlRound.WorldDF(w.docs.toDF(), w.urlMap.toDF(),
+      w.hosts.toDF(), w.rules.toDF()), cfg)
+    try {
+      assert(world.hasDelays)
+      val n = cfg.seeds.size.toLong
+      val frontier = cfg.seeds.zipWithIndex.map { case (u, i) =>
+        (i.toLong, i.toLong, u, u, 0, -1L, "GET", null: String, null: String, null: String)
+      }.toDF("seq", "pos", "uri", "origUri", "depth", "srcSeq", "method", "expected",
+        "referer", "dataQ")
+      val in = CrawlRound.RoundIn(0, frontier,
+        seen = Seq(Seq(("", "")).toDF("uri", "method").limit(0)),
+        hostState = Seq(("", 0.0)).toDF("host", "lastVisitS").limit(0),
+        dupState = Seq(Seq((0L, 0L, 0L, 0L, "")).toDF("size", "bhash", "bhash2", "pop", "uri")
+          .limit(0)),
+        knownMaps = Seq("").toDF("uri").limit(0),
+        nextSeq = n, nextPos = n, seenCount = n, posLo = 0L,
+        seenBloom = () => throw new IllegalStateException("bloom build failed"),
+        placement = Placement.of(s2))
+      // the same engine-broadcast predicate as the family resume test:
+      // Java-serialized values (task binaries, confs) are Spark's own
+      def engineBroadcasts: Set[Long] = blocks.broadcastValues(s2.sparkContext).collect {
+        case (id, _: Map[_, _]) => id
+        case (id, b: Array[Byte]) if !(b.length >= 2 && b(0) == 0xAC.toByte &&
+            b(1) == 0xED.toByte) => id
+      }.toSet
+      val before = engineBroadcasts
+      val e = intercept[IllegalStateException](CrawlRound.run(s2, world, cfg, in))
+      assert(e.getMessage == "bloom build failed")
+      def left = engineBroadcasts -- before
+      // destroy removes blocks asynchronously, hence the bounded wait
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (left.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(left.isEmpty, s"broadcasts outlived the failed round: ${left.toSeq.sorted}")
+    } finally world.hosts.destroy()
+  }
+
   test("unionByName over n frames equals pairwise unionByName (reordered columns)") {
     import spark.implicits._
     val a = Seq((1L, "x", 1.5)).toDF("k", "s", "v")

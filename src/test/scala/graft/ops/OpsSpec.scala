@@ -1,8 +1,7 @@
 package graft.ops
 
-import graft.plans.Ranks
 import graft.seen.UrlSeen
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * be found, exact measures must be exact, sketches deterministic.
   */
 class OpsSpec extends AnyFunSuite {
+  import OpsSpec._
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -48,7 +48,7 @@ class OpsSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.codegen.wholeStage", cg)
       val both = docs.select(
         DedupOps.minhashSignature(DedupOps.shingles(col("text"), 3), 20).as("native"),
-        DedupOps.minhashSignatureHof(DedupOps.shingles(col("text"), 3), 20).as("hof"))
+        minhashSignatureHof(DedupOps.shingles(col("text"), 3), 20).as("hof"))
         .collect()
       both.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1),
         s"signature mismatch (codegen=$cg)"))
@@ -69,7 +69,7 @@ class OpsSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.codegen.wholeStage", cg)
       val both = equivDocs.select(
         DedupOps.shingles(col("text"), n).as("native"),
-        DedupOps.shinglesHof(col("text"), n).as("hof")).collect()
+        shinglesHof(col("text"), n).as("hof")).collect()
       both.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1),
         s"shingle mismatch (codegen=$cg, n=$n): ${r.getSeq[String](0)} vs ${r.getSeq[String](1)}"))
     }
@@ -81,7 +81,7 @@ class OpsSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.codegen.wholeStage", cg)
       val both = equivDocs.select(
         DedupOps.simhash64(col("text")).as("native"),
-        DedupOps.simhash64Hof(col("text")).as("hof")).collect()
+        simhash64Hof(col("text")).as("hof")).collect()
       both.foreach(r => assert(r.getLong(0) == r.getLong(1),
         s"simhash mismatch (codegen=$cg): ${r.getLong(0)} vs ${r.getLong(1)}"))
     }
@@ -95,17 +95,17 @@ class OpsSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.codegen.wholeStage", cg)
       val both = equivDocs.crossJoin(broadcast(b)).select(
         DedupOps.jaccard(DedupOps.shingles(col("text"), 2), col("shB")).as("native"),
-        DedupOps.jaccardHof(DedupOps.shinglesHof(col("text"), 2), col("shB")).as("hof"))
+        jaccardHof(shinglesHof(col("text"), 2), col("shB")).as("hof"))
         .collect()
       both.foreach(r => assert(r.getDouble(0) == r.getDouble(1),
         s"jaccard mismatch (codegen=$cg): ${r.getDouble(0)} vs ${r.getDouble(1)}"))
       // degenerate inputs: both empty (union 0), null elements, disjoint
       val edge = spark.range(1).select(
         DedupOps.jaccard(typedLit(Seq.empty[String]), typedLit(Seq.empty[String])).as("e"),
-        DedupOps.jaccardHof(typedLit(Seq.empty[String]), typedLit(Seq.empty[String])).as("eh"),
+        jaccardHof(typedLit(Seq.empty[String]), typedLit(Seq.empty[String])).as("eh"),
         DedupOps.jaccard(typedLit(Seq[String]("x", null, "y")),
           typedLit(Seq[String](null, "z", "x", "x"))).as("n"),
-        DedupOps.jaccardHof(typedLit(Seq[String]("x", null, "y")),
+        jaccardHof(typedLit(Seq[String]("x", null, "y")),
           typedLit(Seq[String](null, "z", "x", "x"))).as("nh")).head()
       assert(edge.getDouble(0) == edge.getDouble(1), s"empty-union mismatch (codegen=$cg)")
       assert(edge.getDouble(2) == edge.getDouble(3), s"null-element mismatch (codegen=$cg)")
@@ -347,14 +347,6 @@ class OpsSpec extends AnyFunSuite {
     assert(rows.map(_.embedding.toSeq).toSeq == again.map(_.embedding.toSeq).toSeq)
   }
 
-  test("global rank is dense, 0-based, deterministic on unique keys") {
-    val df = spark.range(1000).select((col("id") * 7 % 1000).as("k"))
-    val ranked = Ranks.withGlobalRank(df, Seq(col("k")), "r")
-    val rows = ranked.orderBy(col("r")).collect()
-    assert(rows.map(_.getLong(1)).toSeq == (0L until 1000L))
-    assert(rows.map(_.getLong(0)).toSeq == rows.map(_.getLong(0)).sorted.toSeq)
-  }
-
   test("bloom has no false negatives; dedupe matches exact anti-join") {
     val seen = spark.range(500).select(concat(lit("http://h/"), col("id")).as("uri"),
       lit("GET").as("method"))
@@ -383,5 +375,54 @@ class OpsSpec extends AnyFunSuite {
     val b1e8 = UrlSeen.bloomBytes(100000000L)
     assert(b1e8 > (200L << 20) && b1e8 < (256L << 20))
     assert(UrlSeen.bloomBytes(1L) < 1024)
+  }
+}
+
+/** The interpreted higher-order-function forms of the native sketch
+  * expressions: independent reference implementations the equivalence
+  * tests above pin them against, bit-for-bit.
+  */
+object OpsSpec {
+
+  /** The higher-order-function form of [[DedupOps.shingles]]. */
+  def shinglesHof(text: Column, n: Int): Column = {
+    val tokens = split(lower(trim(text)), "\\s+")
+    when(size(tokens) < n, array(concat_ws(" ", tokens)))
+      .otherwise(transform(sequence(lit(0), size(tokens) - n),
+        i => concat_ws(" ", slice(tokens, i + 1, lit(n)))))
+  }
+
+  /** The higher-order-function form of [[DedupOps.minhashSignature]]. */
+  def minhashSignatureHof(shingleCol: Column, k: Int): Column =
+    aggregate(
+      transform(shingleCol, s => xxhash64(s)),
+      array_repeat(lit(Long.MaxValue), k),
+      (acc, h) => zip_with(acc, sequence(lit(0), lit(k - 1)),
+        (a, i) => least(a, xxhash64(h, i))))
+
+  /** The built-in-array-function form of [[DedupOps.jaccard]]. */
+  def jaccardHof(a: Column, b: Column): Column = {
+    val ad = array_distinct(a)
+    val bd = array_distinct(b)
+    val inter = size(array_intersect(ad, bd)).cast("double")
+    val union = size(array_union(ad, bd)).cast("double")
+    when(union === 0, 0.0).otherwise(inter / union)
+  }
+
+  /** The higher-order-function form of [[DedupOps.simhash64]]. */
+  def simhash64Hof(text: Column): Column = {
+    val tokens = split(lower(trim(text)), "\\s+")
+    val counters = aggregate(
+      tokens,
+      array_repeat(lit(0L), 64),
+      (acc, t) => {
+        val h = xxhash64(t)
+        zip_with(acc, sequence(lit(0), lit(63)),
+          (c, i) => c + when(call_function("shiftright", h, i).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
+      })
+    aggregate(
+      zip_with(counters, sequence(lit(0), lit(63)),
+        (c, i) => when(c > 0, call_function("shiftleft", lit(1L), i)).otherwise(0L)),
+      lit(0L), (acc, bit) => acc.bitwiseOR(bit))
   }
 }
